@@ -130,11 +130,16 @@ class CdcValidator:
 
         Tables diff CONCURRENTLY via the same driver-side thread-pool
         fan-out as ``snapshot`` (reference: NUM_OF_BUFFERS=80 concurrent
-        table pipelines, cdc_operator.rs:237-248) — each table's diff is a
-        handful of driver-blocking Spark actions, so N tables submitted
+        table pipelines, cdc_operator.rs:237-248) — each table's diff is one
+        or two driver-blocking Spark actions, so N tables submitted
         from N threads let the scheduler interleave their stages instead
         of serializing N action latencies. Catalog lookups stay on the
-        calling thread (JDBC catalogs aren't assumed thread-safe)."""
+        calling thread (JDBC catalogs aren't assumed thread-safe).
+
+        Targets are compared as given: a lazy frame from ``snapshot`` re-runs
+        its table's replay inside the diff. Write the snapshots first and
+        pass ``spark.read.parquet`` frames (what the CLI does) to replay each
+        table once."""
         tables = [
             t
             for t in self._tables(payload)

@@ -6,13 +6,19 @@ compare PK-ordered chunks of ``chunk_size`` rows (default 1000,
 dms-cdc-operator-client/src/main.rs:75-77) by content hash, starting at chunk
 ``start_position``. Here the whole comparison is a Spark plan:
 
-1. count diff        — two distributed counts;
-2. chunk-hash diff   — row digest → arithmetic PK-range chunk id
+1. chunk-hash diff   — row digest → arithmetic PK-range chunk id
                        (floor((key - min) / span), min/span from ONE source
-                       aggregate) → per-chunk aggregate digest →
-                       full outer join on chunk;
-3. row drill-down    — anti-join both directions on (pk, row digest), i.e.
+                       aggregate) → ONE aggregate over the side-tagged union
+                       of both tables: per-chunk digest sums and row counts
+                       per side, then a global fold to both row counts,
+                       chunks compared and the mismatched chunk ids;
+2. row drill-down    — anti-join both directions on (pk, row digest), i.e.
                        EXCEPT ALL semantics.
+
+No-PK tables compare as multisets in ONE grouped aggregate over the tagged
+union (group by every column, count per side) — Spark's own EXCEPT ALL
+rewrite, so NULL grouping and float normalization (-0.0, NaN) match
+``exceptAll`` exactly.
 
 Scale notes: the row digest is computed scan-side (whole-stage codegen,
 xxhash64/md5 are JVM built-ins). Chunking is PK-RANGE based, not
@@ -23,6 +29,9 @@ tables, and localize each defect to the chunk containing its key. The chunk
 digest is an order-insensitive SUM over per-row hashes — associative, so
 Spark computes it with partial (map-side) aggregation. All knobs keep the
 reference defaults (chunk_size 1000, start_position 0).
+
+The diff's own columns get names no user column has (``_internal_names``):
+a table may legitimately carry a column called ``_row_hash`` or ``_chunk``.
 """
 
 from __future__ import annotations
@@ -112,46 +121,26 @@ def _pk_order_key(primary_key: list[str]) -> F.Column:
     )
 
 
-def _chunked(
-    df: DataFrame,
-    primary_key: list[str],
-    chunk_size: int,
-    value_cols: list[str],
-    spec: tuple[float, float, int],
-) -> DataFrame:
-    """(chunk_id, chunk_digest, chunk_rows) per PK-RANGE chunk.
+def _internal_names(taken: list[str], *names: str) -> list[str]:
+    """The diff's own column names, each prefixed with underscores until no
+    user column (``taken``) has it — a user column named ``_row_hash`` must
+    survive the drill-down, not be overwritten and dropped. Compared
+    case-insensitively, as Spark resolves column names by default."""
+    taken = {c.lower() for c in taken}
+    out = []
+    for name in names:
+        while name.lower() in taken:
+            name = "_" + name
+        taken.add(name.lower())
+        out.append(name)
+    return out
 
-    Scale redesign vs position-based chunks (what pgdatadiff does): a global
-    ``row_number`` over PK order is a single-partition sort — unusable at
-    100 TB — and one missing row shifts every later chunk, flagging them all.
-    Arithmetic PK-range buckets (floor((key - min) / span), the
-    diff_chunk_digest pattern) need NO global sort, stay aligned across the
-    two tables regardless of missing/extra rows, and localize every defect to
-    exactly the chunk whose key range contains it. Keys outside the source's
-    [min, max] (target-only rows) clamp into the first/last chunk, so they
-    still surface as a digest mismatch there.
-    """
-    lo, span, n_chunks = spec
-    key = _pk_order_key(primary_key)
-    chunk = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(n_chunks - 1),
-            F.floor((key - F.lit(lo)) / F.lit(span)),
-        ),
-    )
-    with_hash = df.select(
-        row_digest(df, value_cols).alias("_row_hash"),
-        chunk.cast("long").alias("_chunk"),
-    )
-    # Order-insensitive chunk digest: sum of row-hash prefixes. Associative →
-    # map-side partial agg; no per-chunk sort needed.
-    return with_hash.groupBy("_chunk").agg(
-        F.sum(F.conv(F.substring("_row_hash", 1, 14), 16, 10).cast("decimal(38,0)")).alias(
-            "_digest"
-        ),
-        F.count(F.lit(1)).alias("_rows"),
-    )
+
+def _digest_value(digest: F.Column) -> F.Column:
+    """Row digest → summable number: its first 14 hex digits (56 bits) as a
+    decimal, so a chunk digest is an order-insensitive SUM — associative,
+    hence map-side partial aggregation and no per-chunk sort."""
+    return F.conv(F.substring(digest, 1, 14), 16, 10).cast("decimal(38,0)")
 
 
 def diff_tables(
@@ -170,39 +159,54 @@ def diff_tables(
     ``start_position`` skips the first k chunks (reference semantics of the
     pgdatadiff ``start_position`` knob, cdc_operator.rs:274).
 
-    No-PK tables fall back to full-row-hash comparison: the row digest over
-    all columns becomes the join key (SURVEY.md §7 hard-part 2).
+    No-PK tables fall back to a whole-row multiset comparison (SURVEY.md §7
+    hard-part 2): ``details`` carries the EXCEPT ALL row counts per side.
 
-    Scan economy (r5): a defect-free PK diff costs exactly TWO full scans —
-    one per table, the chunk aggregations. Row counts come from the chunk
-    relation (sum of per-chunk counts — same scan), not separate
-    ``count()`` jobs, and the tiny chunk relations (n_chunks rows) are
-    persisted so the mismatch collect and chunks_compared count don't
-    recompute the scans. ``chunk_spec`` (from ``compute_chunk_spec``)
-    removes the remaining spec pass for standing pipelines that validate
-    the same table repeatedly; the spec's [min, span] need not be exact —
+    Scan economy: a defect-free PK diff is the spec pass (one source
+    aggregate) plus ONE action — a union-aggregate that scans each table
+    once, folds rows into per-chunk digest sums and counts per side, and
+    returns both row counts, ``chunks_compared`` and the mismatched chunk
+    ids in a single row. ``chunk_spec`` (from ``compute_chunk_spec``)
+    removes the spec pass for standing pipelines that validate the same
+    table repeatedly; the spec's [min, span] need not be exact —
     out-of-range keys clamp into the edge chunks — so a spec computed at
-    snapshot T remains CORRECT for T+1, only chunk granularity drifts.
+    snapshot T remains CORRECT for T+1, only chunk granularity drifts. A
+    no-PK diff is one grouped aggregate; its ``rows_only_in_*`` frames stay
+    lazy ``exceptAll`` plans.
     """
     common = [c for c in source.columns if c in set(target.columns)]
     source = source.select(*common)
     target = target.select(*common)
-    value_cols = common if not primary_key else common
+    side, row_hash, chunk, s_n, t_n, s_d, t_d = _internal_names(
+        common, "_side", "_row_hash", "_chunk", "_src_n", "_tgt_n",
+        "_src_d", "_tgt_d",
+    )
+    is_src = F.col(side) == 0
+    is_tgt = F.col(side) == 1
 
     if not primary_key:
-        src_count = source.count()
-        tgt_count = target.count()
-        only_src = source.exceptAll(target)
-        only_tgt = target.exceptAll(source)
-        n_src, n_tgt = only_src.count(), only_tgt.count()
+        # multiset compare: per distinct row, its multiplicity on each side
+        per_row = (
+            source.withColumn(side, F.lit(0))
+            .union(target.withColumn(side, F.lit(1)))
+            .groupBy(*common)
+            .agg(F.count(F.when(is_src, 1)).alias(s_n),
+                 F.count(F.when(is_tgt, 1)).alias(t_n))
+        )
+        totals = per_row.agg(
+            F.sum(s_n), F.sum(t_n),
+            F.sum(F.greatest(F.col(s_n) - F.col(t_n), F.lit(0))),
+            F.sum(F.greatest(F.col(t_n) - F.col(s_n), F.lit(0))),
+        ).first()
+        src_count, tgt_count, n_src, n_tgt = (int(v or 0) for v in totals)
         return DiffReport(
             table=table,
             source_count=src_count,
             target_count=tgt_count,
             chunks_compared=0,
             mismatched_chunks=[],
-            rows_only_in_source=only_src,
-            rows_only_in_target=only_tgt,
+            rows_only_in_source=source.exceptAll(target),
+            rows_only_in_target=target.exceptAll(source),
             details={"mode": "full-row-hash", "rows_only_in_source": n_src,
                      "rows_only_in_target": n_tgt},
         )
@@ -211,45 +215,57 @@ def diff_tables(
     # literals on both sides), so both tables bucket identically; callers
     # with a precomputed spec skip this pass
     spec = chunk_spec or compute_chunk_spec(source, primary_key, chunk_size)
-    # persist the (n_chunks-row) chunk relations: counts, the mismatch
-    # collect, and chunks_compared all read them — without the persist each
-    # action would recompute the full table scans
-    s_all = _chunked(source, primary_key, chunk_size, value_cols, spec).persist()
-    t_all = _chunked(target, primary_key, chunk_size, value_cols, spec).persist()
-    try:  # always unpersist — a bad chunk_spec or task failure mid-action
-        # must not leak the cached relations for the session lifetime
-        # (standing validators reuse one session across many runs)
-        src_count = s_all.agg(F.sum("_rows")).first()[0] or 0
-        tgt_count = t_all.agg(F.sum("_rows")).first()[0] or 0
-        s_chunks = s_all.filter(F.col("_chunk") >= start_position)
-        t_chunks = t_all.filter(F.col("_chunk") >= start_position)
-        joined = s_chunks.alias("s").join(
-            t_chunks.alias("t"), on="_chunk", how="full_outer"
+    lo, span, n_chunks = spec
+    # Keys outside the spec's [min, max] (target-only rows, or a stale spec)
+    # clamp into the first/last chunk, so they still surface as a mismatch.
+    chunk_id = F.greatest(
+        F.lit(0),
+        F.least(
+            F.lit(n_chunks - 1),
+            F.floor((_pk_order_key(primary_key) - F.lit(lo)) / F.lit(span)),
+        ),
+    ).cast("long")
+
+    def tagged(df: DataFrame, tag: int) -> DataFrame:
+        return df.select(
+            chunk_id.alias(chunk),
+            _digest_value(row_digest(df, common)).alias(row_hash),
+            F.lit(tag).alias(side),
         )
-        mismatched = (
-            joined.filter(
-                ~(
-                    F.col("s._digest").eqNullSafe(F.col("t._digest"))
-                    & F.col("s._rows").eqNullSafe(F.col("t._rows"))
-                )
-            )
-            .select("_chunk")
-            .orderBy("_chunk")
+
+    per_chunk = (
+        tagged(source, 0)
+        .union(tagged(target, 1))
+        .groupBy(chunk)
+        .agg(
+            F.sum(F.when(is_src, F.col(row_hash))).alias(s_d),
+            F.sum(F.when(is_tgt, F.col(row_hash))).alias(t_d),
+            F.count(F.when(is_src, 1)).alias(s_n),
+            F.count(F.when(is_tgt, 1)).alias(t_n),
         )
-        bad_chunks = [r["_chunk"] for r in mismatched.collect()]
-        chunks_compared = joined.count()
-    finally:
-        s_all.unpersist()
-        t_all.unpersist()
+    )
+    compared = F.col(chunk) >= start_position
+    differs = ~(
+        F.col(s_d).eqNullSafe(F.col(t_d))
+        & (F.col(s_n) == F.col(t_n))
+    )
+    totals = per_chunk.agg(
+        F.sum(s_n), F.sum(t_n),
+        F.count(F.when(compared, 1)),
+        # collect_list skips the NULLs the when() leaves for good chunks
+        F.collect_list(F.when(compared & differs, F.col(chunk))),
+    ).first()
+    src_count, tgt_count, chunks_compared = (int(v or 0) for v in totals[:3])
+    bad_chunks = sorted(totals[3])
 
     only_src = only_tgt = None
     if drill_down and bad_chunks:
         # Row-level drill-down via keyed hash anti-join, both directions.
-        s_h = source.withColumn("_row_hash", row_digest(source, value_cols))
-        t_h = target.withColumn("_row_hash", row_digest(target, value_cols))
-        keys = [*primary_key, "_row_hash"]
-        only_src = s_h.join(t_h, on=keys, how="left_anti").drop("_row_hash")
-        only_tgt = t_h.join(s_h, on=keys, how="left_anti").drop("_row_hash")
+        s_h = source.withColumn(row_hash, row_digest(source, common))
+        t_h = target.withColumn(row_hash, row_digest(target, common))
+        keys = [*primary_key, row_hash]
+        only_src = s_h.join(t_h, on=keys, how="left_anti").drop(row_hash)
+        only_tgt = t_h.join(s_h, on=keys, how="left_anti").drop(row_hash)
 
     return DiffReport(
         table=table,

@@ -304,3 +304,52 @@ def test_cli_quality_audit(spark, tmp_path):
     # referential without a ref root is a usage error
     rc = main(["--quality-audit", tbl, str(spec)])
     assert rc == 1
+
+
+def test_cli_single_call_snapshot_and_validate_two_tables(spark, tmp_path, capsys):
+    """Snapshot + validate in ONE call on a two-table catalog: tables write
+    concurrently, yet the snapshot and validate lines print in catalog
+    order (not alphabetical); validate reads the written snapshot, so a
+    source that disagrees with it exits 1 and names the bad chunk."""
+    from tests.cdc_fixtures import write_cdc_file
+
+    root = str(tmp_path / "bucket")
+    cols_o = ["Op", "_dms_ingestion_timestamp", "id", "v"]
+    write_cdc_file(f"{root}/db/public/orders/LOAD00000001.parquet",
+                   [{"Op": "I", "_dms_ingestion_timestamp": "t", "id": i, "v": i}
+                    for i in range(5)], cols_o)
+    write_cdc_file(f"{root}/db/public/orders/2024/01/02/a.parquet",
+                   [{"Op": "D", "_dms_ingestion_timestamp": "t", "id": 0, "v": 0}],
+                   cols_o)
+    write_cdc_file(f"{root}/db/public/users/LOAD00000001.parquet",
+                   [{"Op": "I", "_dms_ingestion_timestamp": "t", "k": 10, "name": "x"},
+                    {"Op": "I", "_dms_ingestion_timestamp": "t", "k": 11, "name": "y"}],
+                   ["Op", "_dms_ingestion_timestamp", "k", "name"])
+    cat = tmp_path / "catalog.json"
+    cat.write_text(json.dumps({"public": {
+        "users": {"columns": {"k": "bigint", "name": "text"}, "primary_key": ["k"]},
+        "orders": {"columns": {"id": "bigint", "v": "bigint"}, "primary_key": ["id"]},
+    }}))
+    good, bad = str(tmp_path / "good"), str(tmp_path / "bad")
+    for src_root, orders in ((good, [(i, i) for i in range(1, 5)]),
+                             (bad, [(i, i) for i in range(1, 4)])):
+        spark.createDataFrame([(10, "x"), (11, "y")], "k long, name string") \
+            .write.parquet(f"{src_root}/users")
+        spark.createDataFrame(orders, "id long, v long") \
+            .write.parquet(f"{src_root}/orders")
+    argv = ["--bucket-root", root, "--database", "db", "--schema", "public",
+            "--catalog-json", str(cat), "--start-date", "2020-01-01",
+            "--output", str(tmp_path / "out")]
+
+    capsys.readouterr()
+    assert main([*argv, "--source-root", good]) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert [ln.split(":")[0] for ln in lines] == [
+        "snapshot users", "snapshot orders", "validate users", "validate orders"]
+    assert lines[1].startswith("snapshot orders: 4 rows")
+    assert lines[3].startswith("validate orders: MATCH counts=4/4")
+
+    assert main([*argv, "--source-root", bad]) == 1
+    out = capsys.readouterr().out
+    assert "validate users: MATCH" in out
+    assert "validate orders: MISMATCH counts=3/4 bad_chunks=[0]" in out

@@ -162,3 +162,78 @@ def test_composite_pk_diff(spark):
     src_only = {(r["k1"], r["k2"]) for r in rep.rows_only_in_source.collect()}
     tgt_only = {(r["k1"], r["k2"]) for r in rep.rows_only_in_target.collect()}
     assert src_only == {(2, "b")} and tgt_only == {(2, "b")}
+
+
+def test_user_columns_named_like_internal_columns_survive(spark):
+    """The diff's own columns (row hash, chunk id, side tag) must not
+    shadow user columns of the same name: a table may carry ``_row_hash``,
+    ``_chunk`` or ``_side``, and the drill-down must return them intact."""
+    a = spark.range(300).select(
+        F.col("id").alias("pk"),
+        (F.col("id") % 5).alias("_row_hash"),
+        (F.col("id") * 2).alias("_chunk"),
+        F.concat(F.lit("s"), F.col("id")).alias("_side"),
+    )
+    b = a.withColumn(
+        "_chunk", F.when(F.col("pk") == 123, -1).otherwise(F.col("_chunk"))
+    )
+    rep = diff_tables(a, b, ["pk"], chunk_size=100)
+    assert rep.counts_match and rep.mismatched_chunks == [1]
+    assert rep.rows_only_in_source.columns == a.columns
+    assert rep.rows_only_in_target.columns == a.columns
+    assert [tuple(r) for r in rep.rows_only_in_source.collect()] == [(123, 3, 246, "s123")]
+    assert [tuple(r) for r in rep.rows_only_in_target.collect()] == [(123, 3, -1, "s123")]
+
+    # a defect in the user's own _row_hash column is still a defect
+    c = a.withColumn(
+        "_row_hash", F.when(F.col("pk") == 5, 99).otherwise(F.col("_row_hash"))
+    )
+    assert diff_tables(a, c, ["pk"], chunk_size=100).mismatched_chunks == [0]
+
+    nopk = diff_tables(a.drop("pk"), b.drop("pk"), [])
+    assert nopk.details["rows_only_in_source"] == 1
+    assert nopk.details["rows_only_in_target"] == 1
+    assert nopk.rows_only_in_source.columns == ["_row_hash", "_chunk", "_side"]
+    # Spark resolves names case-insensitively: _SIDE collides with _side
+    upper = [df.drop("pk").withColumnRenamed("_side", "_SIDE") for df in (a, b)]
+    nopk = diff_tables(*upper, [])
+    assert nopk.details["rows_only_in_source"] == 1
+    assert nopk.details["rows_only_in_target"] == 1
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "diff job budget")
+    try:
+        result = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_diff_job_budget(spark):
+    """Job budget of the compare, pinned on small tables.
+
+    A defect-free PK diff with a precomputed ``chunk_spec`` is ONE action
+    (a union-aggregate over both tables); AQE runs its two shuffle stages
+    and the result stage as 3 jobs. The previous design (two persisted
+    chunk relations, two count actions, a full-outer-join collect and a
+    count) took 10. A no-PK diff is one grouped aggregate: 4 jobs, down
+    from 13 (two counts plus two ``exceptAll().count()``)."""
+    a = _base(spark, 2000)
+    spec = compute_chunk_spec(a, ["pk"], chunk_size=500)
+    rep, jobs = _jobs_of(
+        spark, "diff-budget-pk",
+        lambda: diff_tables(a, _base(spark, 2000), ["pk"], chunk_size=500,
+                            chunk_spec=spec),
+    )
+    assert rep.is_match and rep.chunks_compared == 4
+    assert jobs <= 3, jobs
+
+    rows = a.drop("pk")
+    rep, jobs = _jobs_of(
+        spark, "diff-budget-nopk",
+        lambda: diff_tables(rows, rows.union(rows.limit(1)), []),
+    )
+    assert rep.details["rows_only_in_target"] == 1
+    assert jobs <= 4, jobs

@@ -23,10 +23,9 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
-from rust_cdc_validator_spark.api import CdcPayload, CdcValidator
+from rust_cdc_validator_spark.api import CdcPayload, CdcValidator, _fan_out
 from rust_cdc_validator_spark.session import get_spark
 from rust_cdc_validator_spark.sources.catalog import StaticCatalog
 from rust_cdc_validator_spark.sources.manifest import FileMode
@@ -368,20 +367,15 @@ def main(argv: list[str] | None = None) -> int:
     if not payload.only_datadiff:
         snapshots = validator.snapshot(payload)
 
-        def write(table: str, df) -> tuple[str, int]:
+        def write(table: str) -> int:
             out = f"{args.output}/{table}"
-            df.write.mode("overwrite").parquet(out)
-            return out, spark.read.parquet(out).count()
+            snapshots[table].write.mode("overwrite").parquet(out)
+            return spark.read.parquet(out).count()
 
-        # tables write concurrently (same bound as snapshot/validate); the
-        # lines still print in catalog order
-        with ThreadPoolExecutor(
-            max_workers=max(1, min(payload.max_parallel_tables, 32))
-        ) as ex:
-            futures = {t: ex.submit(write, t, df) for t, df in snapshots.items()}
-            for table, fut in futures.items():
-                out, n = fut.result()
-                print(f"snapshot {table}: {n} rows -> {out}")
+        # tables write concurrently on the snapshot/validate pool; the lines
+        # still print in catalog order
+        for table, n in _fan_out(payload, write, snapshots).items():
+            print(f"snapshot {table}: {n} rows -> {args.output}/{table}")
     if payload.only_snapshot:
         return 0
 

@@ -11,7 +11,8 @@ cdc_operator_payload.rs:70-72).
 Multi-table orchestration: the reference runs up to NUM_OF_BUFFERS=80 table
 pipelines concurrently (cdc_operator.rs:237-248). On Spark the per-table work
 is itself distributed, so table-level fan-out is a driver-side thread pool
-issuing independent jobs — the scheduler interleaves their stages.
+issuing independent jobs — the scheduler interleaves their stages. Every
+multi-table call goes through that one pool, ``_fan_out``.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import posixpath
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
@@ -47,7 +49,10 @@ class CdcPayload:
     start_position: int = 0       # main.rs:81-83 default
     only_datadiff: bool = False
     only_snapshot: bool = False
-    max_parallel_tables: int = int(os.environ.get("NUM_OF_BUFFERS", "80"))
+    # read when each payload is built, so a changed environment applies
+    max_parallel_tables: int = field(
+        default_factory=lambda: int(os.environ.get("NUM_OF_BUFFERS", "80"))
+    )
 
     def __post_init__(self) -> None:
         if self.only_datadiff and self.only_snapshot:
@@ -67,6 +72,21 @@ class CdcPayload:
                 if dt.tzinfo is None:
                     dt = dt.replace(tzinfo=timezone.utc)
                 object.__setattr__(self, f_, dt)
+
+
+def _fan_out(payload: CdcPayload, fn: Callable, tables: Iterable[str]) -> dict:
+    """``{t: fn(t)}`` for every table, run concurrently on one local
+    thread pool (reference: NUM_OF_BUFFERS-wide table pipelines,
+    cdc_operator.rs:237-248). Each call submits its own Spark jobs; the
+    scheduler interleaves their stages instead of serializing N action
+    latencies. The pool is ``payload.max_parallel_tables`` wide, capped at
+    32 threads (and at least 1). Results come back in ``tables`` (catalog)
+    order; the first failing table's exception propagates."""
+    with ThreadPoolExecutor(
+        max_workers=max(1, min(payload.max_parallel_tables, 32))
+    ) as ex:
+        futures = {t: ex.submit(fn, t) for t in tables}
+        return {t: fut.result() for t, fut in futures.items()}
 
 
 class CdcValidator:
@@ -104,14 +124,12 @@ class CdcValidator:
         )
 
     def snapshot(self, payload: CdcPayload) -> dict[str, DataFrame]:
-        """All tables, fanned out like cdc_operator.rs:237-248."""
-        tables = self._tables(payload)
-        results: dict[str, DataFrame] = {}
-        with ThreadPoolExecutor(max_workers=max(1, min(payload.max_parallel_tables, 32))) as ex:
-            futures = {t: ex.submit(self.snapshot_table, payload, t) for t in tables}
-            for t, fut in futures.items():
-                results[t] = fut.result()
-        return results
+        """All tables, fanned out on ``_fan_out`` like
+        cdc_operator.rs:237-248."""
+        return _fan_out(
+            payload, lambda t: self.snapshot_table(payload, t),
+            self._tables(payload),
+        )
 
     def validate(
         self,
@@ -128,13 +146,10 @@ class CdcValidator:
         the same tables repeatedly pass them back to skip each table's
         spec pass (see ``operators/diff.py:compute_chunk_spec``).
 
-        Tables diff CONCURRENTLY via the same driver-side thread-pool
-        fan-out as ``snapshot`` (reference: NUM_OF_BUFFERS=80 concurrent
-        table pipelines, cdc_operator.rs:237-248) — each table's diff is one
-        or two driver-blocking Spark actions, so N tables submitted
-        from N threads let the scheduler interleave their stages instead
-        of serializing N action latencies. Catalog lookups stay on the
-        calling thread (JDBC catalogs aren't assumed thread-safe).
+        Tables diff CONCURRENTLY on ``_fan_out``, like ``snapshot`` — each
+        table's diff is one or two blocking Spark actions. Catalog
+        lookups stay on the calling thread (JDBC catalogs aren't assumed
+        thread-safe).
 
         Targets are compared as given: a lazy frame from ``snapshot`` re-runs
         its table's replay inside the diff. Write the snapshots first and
@@ -146,26 +161,19 @@ class CdcValidator:
             if t in source_frames and t in target_frames
         ]
         pks = {t: self.catalog.get_primary_key(payload.schema, t) for t in tables}
-        reports: dict[str, DiffReport] = {}
-        with ThreadPoolExecutor(
-            max_workers=max(1, min(payload.max_parallel_tables, 32))
-        ) as ex:
-            futures = {
-                t: ex.submit(
-                    diff_tables,
-                    source_frames[t],
-                    target_frames[t],
-                    primary_key=pks[t],
-                    chunk_size=payload.chunk_size,
-                    start_position=payload.start_position,
-                    table=t,
-                    chunk_spec=(chunk_specs or {}).get(t),
-                )
-                for t in tables
-            }
-            for t, fut in futures.items():
-                reports[t] = fut.result()
-        return reports
+        return _fan_out(
+            payload,
+            lambda t: diff_tables(
+                source_frames[t],
+                target_frames[t],
+                primary_key=pks[t],
+                chunk_size=payload.chunk_size,
+                start_position=payload.start_position,
+                table=t,
+                chunk_spec=(chunk_specs or {}).get(t),
+            ),
+            tables,
+        )
 
     def advance_state(
         self,
@@ -199,15 +207,14 @@ class CdcValidator:
         half-open, so a file whose mtime equals the shared boundary lands
         in exactly the later run).
         """
-        from rust_cdc_validator_spark.operators.replay import with_sequence
+        from rust_cdc_validator_spark.operators.replay import scan_changes
         from rust_cdc_validator_spark.operators.state import (
             merge_into_state,
             merge_into_state_touched,
             _bucket_count,
             save_state_bucketed,
         )
-        from rust_cdc_validator_spark.sources.catalog import check_schema_containment
-        from rust_cdc_validator_spark.sources.manifest import build_manifest, discover_files
+        from rust_cdc_validator_spark.sources.manifest import discover_files
 
         entries = [
             e
@@ -224,41 +231,37 @@ class CdcValidator:
         pk = self.catalog.get_primary_key(payload.schema, table)
         if not pk:
             raise ValueError("advance_state requires a primary key (bucketed state)")
-        if not entries:  # empty window: state unchanged, just version forward
-            state = self.spark.table(state_table)
-            save_state_bucketed(
-                state, new_state_table, pk,
-                n_buckets=n_buckets or _bucket_count(self.spark, state_table),
-            )
-            self._stamp_state_window(new_state_table, payload)
-            return self.spark.table(new_state_table)
-        changes = self.spark.read.option("mergeSchema", "true").parquet(
-            *[e.path for e in entries]
-        )
-        # same drift gate as snapshot_table: a column added to the CDC
-        # stream mid-window raises the catalog-aware error instead of being
-        # silently dropped by the merge's state-schema projection; a delta
-        # MISSING state columns surfaces as an unresolved column in the
-        # merge, which is correct (the state schema is the contract)
-        columns = self.catalog.get_table_columns(payload.schema, table)
-        check_schema_containment(changes.columns, list(columns))
-        seqd = with_sequence(changes, build_manifest(self.spark, entries))
         current_buckets = _bucket_count(self.spark, state_table)
-        if n_buckets is not None and n_buckets != current_buckets:
-            # re-bucketing: touched-file reuse is impossible (every bucket's
-            # membership changes), so fall back to the full rewrite
-            merged = merge_into_state(self.spark, state_table, seqd, pk)
-            save_state_bucketed(merged, new_state_table, pk, n_buckets=n_buckets)
-            self._stamp_state_window(new_state_table, payload)
-            return self.spark.table(new_state_table)
-        # the merge reads Op for its delete arm and drops the envelope
-        # itself; only the delta's buckets are rewritten — untouched
-        # buckets' files carry over byte-identical (operators/state.py)
-        new_state = merge_into_state_touched(
-            self.spark, state_table, seqd, pk, new_state_table
-        )
+        if not entries:  # empty window: state unchanged, just version forward
+            save_state_bucketed(
+                self.spark.table(state_table), new_state_table, pk,
+                n_buckets=n_buckets or current_buckets,
+            )
+        else:
+            # same drift gate as snapshot_table: a column added to the CDC
+            # stream mid-window raises the catalog-aware error instead of
+            # being silently dropped by the merge's state-schema projection;
+            # a delta MISSING state columns surfaces as an unresolved column
+            # in the merge, which is correct (the state schema is the
+            # contract)
+            columns = self.catalog.get_table_columns(payload.schema, table)
+            seqd = scan_changes(self.spark, entries, expected_columns=list(columns))
+            if n_buckets is not None and n_buckets != current_buckets:
+                # re-bucketing: touched-file reuse is impossible (every
+                # bucket's membership changes), so fall back to the full
+                # rewrite
+                merged = merge_into_state(self.spark, state_table, seqd, pk)
+                save_state_bucketed(merged, new_state_table, pk, n_buckets=n_buckets)
+            else:
+                # the merge reads Op for its delete arm and drops the
+                # envelope itself; only the delta's buckets are rewritten —
+                # untouched buckets' files carry over byte-identical
+                # (operators/state.py)
+                merge_into_state_touched(
+                    self.spark, state_table, seqd, pk, new_state_table
+                )
         self._stamp_state_window(new_state_table, payload)
-        return new_state
+        return self.spark.table(new_state_table)
 
     def _stamp_state_window(self, table_name: str, payload: CdcPayload) -> None:
         def _utc(dt: datetime) -> datetime:
@@ -301,30 +304,22 @@ class CdcValidator:
         n_buckets: int | None = None,
     ) -> dict[str, DataFrame]:
         """Advance EVERY catalog table's bucketed state over the payload
-        window, fanned out on the same bounded thread pool as ``snapshot``
-        / ``validate`` (reference: NUM_OF_BUFFERS-wide table pipelines,
-        cdc_operator.rs:237-248). ``state_tables`` / ``new_state_tables``
-        map table name → current / next state-table name; tables missing
-        from either map are skipped."""
+        window, fanned out on ``_fan_out`` like ``snapshot`` /
+        ``validate``. ``state_tables`` / ``new_state_tables`` map table
+        name → current / next state-table name; tables missing from either
+        map are skipped."""
         tables = [
             t
             for t in self._tables(payload)
             if t in state_tables and t in new_state_tables
         ]
-        results: dict[str, DataFrame] = {}
-        with ThreadPoolExecutor(
-            max_workers=max(1, min(payload.max_parallel_tables, 32))
-        ) as ex:
-            futures = {
-                t: ex.submit(
-                    self.advance_state, payload, t,
-                    state_tables[t], new_state_tables[t], n_buckets,
-                )
-                for t in tables
-            }
-            for t, fut in futures.items():
-                results[t] = fut.result()
-        return results
+        return _fan_out(
+            payload,
+            lambda t: self.advance_state(
+                payload, t, state_tables[t], new_state_tables[t], n_buckets
+            ),
+            tables,
+        )
 
     def drift_between_states(
         self,

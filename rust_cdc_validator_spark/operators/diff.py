@@ -73,7 +73,13 @@ class DiffReport:
 
     @property
     def is_match(self) -> bool:
-        return self.counts_match and not self.mismatched_chunks
+        # a no-PK diff has no chunks: its verdict is the multiset difference
+        return (
+            self.counts_match
+            and not self.mismatched_chunks
+            and not self.details.get("rows_only_in_source")
+            and not self.details.get("rows_only_in_target")
+        )
 
 
 def compute_chunk_spec(

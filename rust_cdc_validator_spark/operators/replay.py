@@ -207,21 +207,18 @@ def union_evolving(epochs: list[DataFrame]) -> DataFrame:
     return out
 
 
-def replay_snapshot(
+def scan_changes(
     spark,
     entries: list[ManifestEntry],
-    primary_key: list[str],
     expected_columns: list[str] | None = None,
     file_format: str = "parquet",
     schema=None,
 ) -> DataFrame:
-    """End-to-end snapshot of one table: manifest → scan → net effect.
-
-    Mirrors CDCOperator::snapshot's per-table pipeline
-    (src/cdc/cdc_operator.rs:57-231) as one declarative plan:
-    read every LOAD + CDC file in a single distributed scan, sequence rows,
-    reduce to final state. ``expected_columns`` triggers the schema-drift
-    containment check (cdc_operator.rs:170-184).
+    """The sequenced change log of ``entries``: every file in ONE
+    distributed scan, the schema-drift containment check against
+    ``expected_columns`` (cdc_operator.rs:170-184), envelope columns
+    present on every row, and the total replay order ``_seq`` from the
+    broadcast manifest join (:func:`with_sequence`).
 
     ``file_format``: 'parquet' (the reference's only format) or 'csv' —
     DMS's *default* output format, headerless with the envelope columns
@@ -250,8 +247,28 @@ def replay_snapshot(
             df = df.withColumn(c, F.lit(None).cast("string"))
 
     manifest_df = build_manifest(spark, entries)
-    seqd = with_sequence(df, manifest_df, has_row_index=(file_format == "parquet"))
-    return net_effect(seqd, primary_key)
+    return with_sequence(df, manifest_df, has_row_index=(file_format == "parquet"))
+
+
+def replay_snapshot(
+    spark,
+    entries: list[ManifestEntry],
+    primary_key: list[str],
+    expected_columns: list[str] | None = None,
+    file_format: str = "parquet",
+    schema=None,
+) -> DataFrame:
+    """End-to-end snapshot of one table: manifest → scan → net effect.
+
+    Mirrors CDCOperator::snapshot's per-table pipeline
+    (src/cdc/cdc_operator.rs:57-231) as one declarative plan: the
+    :func:`scan_changes` log of every LOAD + CDC file, reduced to final
+    state by :func:`net_effect`.
+    """
+    return net_effect(
+        scan_changes(spark, entries, expected_columns, file_format, schema),
+        primary_key,
+    )
 
 
 def apply_changes_sql(

@@ -27,7 +27,9 @@ changes. The bucketed layout fixes the asymmetry:
   untouched buckets' files carry over byte-identical — hard-linked on
   local stores (zero bytes moved), copied elsewhere (their ``_NNNNN``
   bucket suffix keeps them scannable). Bytes written per merge ∝ delta
-  buckets, not state size.
+  buckets, not state size. The state read is fixed by the delta: the
+  touched buckets' files alone when it touches at most ¼ of the buckets,
+  else the exchange-free bucketed scan.
 
 The reference has no incremental mode (it replays LOAD+CDC from scratch
 each run, cdc_operator.rs:57-231); this is the Spark-first extension of
@@ -39,10 +41,13 @@ from __future__ import annotations
 
 import posixpath
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from rust_cdc_validator_spark.sources.manifest import hadoop_fs
 
 from .replay import ENVELOPE_COLS, OP_COL
 
@@ -81,12 +86,23 @@ def save_state_bucketed(
     writer.saveAsTable(table)
 
 
+def _describe(spark: SparkSession, table: str, key: str, missing: str) -> str:
+    """One ``DESCRIBE FORMATTED`` detail of ``table``; ValueError naming
+    ``missing`` when the catalog has no such row."""
+    for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
+        if row["col_name"].strip() == key:
+            return row["data_type"].strip()
+    raise ValueError(f"table {table!r} {missing}")
+
+
 def _bucket_count(spark: SparkSession, table: str) -> int:
     """Bucket count of a saved state table, from the catalog."""
-    for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if row["col_name"].strip() == "Num Buckets":
-            return int(row["data_type"])
-    raise ValueError(f"table {table!r} is not bucketed — not a state table")
+    return int(_describe(spark, table, "Num Buckets",
+                         "is not bucketed — not a state table"))
+
+
+def _table_location(spark: SparkSession, table: str) -> str:
+    return _describe(spark, table, "Location", "has no location")
 
 
 def last_change_per_key(
@@ -177,20 +193,10 @@ def bucket_id(primary_key: list[str], n_buckets: int) -> Column:
     return F.pmod(F.hash(*[F.col(k) for k in primary_key]), F.lit(n_buckets))
 
 
-def _table_location(spark: SparkSession, table: str) -> str:
-    for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if row["col_name"].strip() == "Location":
-            return row["data_type"].strip()
-    raise ValueError(f"table {table!r} has no location")
-
-
 def _bucket_files(spark: SparkSession, location: str) -> dict[int, list[str]]:
     """Data files of a bucketed table grouped by bucket id (from the
     ``_NNNNN`` file-name suffix)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(location)
-    fs = root.getFileSystem(conf)
+    fs, root, _ = hadoop_fs(spark, location)
     out: dict[int, list[str]] = {}
     for status in fs.listStatus(root):
         name = status.getPath().getName()
@@ -198,6 +204,42 @@ def _bucket_files(spark: SparkSession, location: str) -> dict[int, list[str]]:
         if status.isFile() and m:
             out.setdefault(int(m.group(1)), []).append(name)
     return out
+
+
+@contextmanager
+def _touched_delta(
+    changes: DataFrame,
+    primary_key: list[str],
+    n_buckets: int,
+    op_col: str,
+    seq_col: str,
+):
+    """The delta of a touched-bucket merge: ``changes`` reduced to its last
+    change per key on a ``n_buckets``-wide PK exchange, persisted for the
+    duration of the block, with the sorted bucket ids it touches —
+    collected through :func:`bucket_id`, the same ``pmod(hash(pk), n)`` the
+    bucketed write uses, so "touched" is exact (bounded by ``n_buckets``
+    ints)."""
+    changes = changes.repartition(n_buckets, *primary_key)
+    delta = last_change_per_key(changes, primary_key, op_col, seq_col).persist()
+    try:
+        touched = sorted(
+            r[0]
+            for r in delta.select(
+                bucket_id(primary_key, n_buckets).alias("_b")
+            ).distinct().collect()
+        )
+        yield delta, touched
+    finally:
+        delta.unpersist()
+
+
+def _read_files(spark: SparkSession, schema, paths: list[str]) -> DataFrame:
+    """Plain parquet scan of exactly ``paths`` (an empty frame of
+    ``schema`` when there are none)."""
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def merge_into_state_touched(
@@ -209,8 +251,6 @@ def merge_into_state_touched(
     op_col: str = OP_COL,
     seq_col: str = "_seq",
     path: str | None = None,
-    read_strategy: str = "auto",
-    prune_threshold: float = 0.25,
 ) -> DataFrame:
     """Apply a sequenced CDC delta to bucketed state, writing ONLY the
     buckets the delta touches; untouched buckets' files carry over
@@ -225,27 +265,24 @@ def merge_into_state_touched(
     dynamic-partition overwrite (``streaming/incremental.py:94-126``).
 
     Mechanics:
-    * the delta's bucket ids come from :func:`bucket_id` — the same
-      ``pmod(hash(pk), n)`` the bucketed write uses, so "touched" is exact;
-      collecting them is bounded by ``n_buckets`` ints.
-    * the state READ has two strategies, because file pruning and
+    * the delta and its touched bucket ids come from
+      :func:`_touched_delta`.
+    * the state READ is one of two plans, because file pruning and
       exchange-freedom are mutually exclusive on a bucketed table Spark
-      can't bucket-prune by a hash predicate:
-      - ``"bucketed-scan"``: the full bucketed scan, row-filtered to
-        touched buckets — outputPartitioning survives a Filter, so the
-        merge join stays Exchange-free on the state side (same plan
-        assertion as ``merge_into_state``), but every state file is read.
-      - ``"pruned-files"``: ONLY the touched buckets' files are read (the
-        same file→bucket map the copy step uses); a plain parquet read
-        has no known partitioning, so the join re-shuffles the touched
-        fraction. Reads AND shuffles (k/N)·|state| instead of reading all
-        of it — the win whenever the touched fraction is small, which is
-        the standing-pipeline steady state.
-      - ``"auto"`` (default) picks pruned-files when
-        ``len(touched) <= prune_threshold · n_buckets`` (default ¼ —
-        below that, shuffling k/N of the state costs less than scanning
-        the other (N−k)/N), else the exchange-free full scan. Both
-        strategies are result-identical (equivalence-tested).
+      can't bucket-prune by a hash predicate. The choice is fixed: pruned
+      files when the delta touches at most ¼ of the buckets, else the full
+      bucketed scan — below ¼, shuffling k/N of the state costs less than
+      scanning the other (N−k)/N. Both plans are result-identical
+      (equivalence-tested):
+      - pruned files: ONLY the touched buckets' files are read (the same
+        file→bucket map the copy step uses); a plain parquet read has no
+        known partitioning, so the join re-shuffles the touched fraction.
+        Reads AND shuffles (k/N)·|state| instead of reading all of it —
+        the standing-pipeline steady state (small deltas).
+      - bucketed scan: the full bucketed scan, row-filtered to touched
+        buckets — outputPartitioning survives a Filter, so the merge join
+        stays Exchange-free on the state side (same plan assertion as
+        ``merge_into_state``), but every state file is read (backfills).
     * untouched buckets: the old version's files keep their
       ``_NNNNN`` bucket suffix when copied, so the new table's bucketed
       scan picks them up unchanged (Spark groups multiple files per bucket
@@ -255,54 +292,34 @@ def merge_into_state_touched(
     """
     n_buckets = _bucket_count(spark, state_table)
     old_loc = _table_location(spark, state_table)
-    changes = changes.repartition(n_buckets, *primary_key)
-    delta = last_change_per_key(changes, primary_key, op_col, seq_col).persist()
-    try:
-        touched = sorted(
-            r[0]
-            for r in delta.select(
-                bucket_id(primary_key, n_buckets).alias("_b")
-            ).distinct().collect()
-        )
-        strategy = read_strategy
-        if strategy == "auto":
-            strategy = (
-                "pruned-files"
-                if len(touched) <= prune_threshold * n_buckets
-                else "bucketed-scan"
-            )
-        if strategy == "pruned-files":
-            files = _bucket_files(spark, old_loc)
-            paths = [
+    old_files = _bucket_files(spark, old_loc)
+    with _touched_delta(
+        changes, primary_key, n_buckets, op_col, seq_col
+    ) as (delta, touched):
+        state = spark.table(state_table)
+        if 4 * len(touched) <= n_buckets:
+            state_touched = _read_files(spark, state.schema, [
                 posixpath.join(old_loc, name)
                 for b in touched
-                for name in files.get(b, [])
-            ]
-            state_touched = (
-                spark.read.schema(spark.table(state_table).schema).parquet(*paths)
-                if paths
-                else spark.table(state_table).limit(0)
-            )
+                for name in old_files.get(b, [])
+            ])
         else:
-            state_touched = spark.table(state_table).filter(
+            state_touched = state.filter(
                 bucket_id(primary_key, n_buckets).isin(touched)
             )
         merged = _merge_frames(state_touched, delta, primary_key)
         save_state_bucketed(merged, new_state_table, primary_key,
                             n_buckets=n_buckets, path=path)
-    finally:
-        delta.unpersist()
 
     # carry untouched buckets' files from the old version into the new one
-    new_loc = _table_location(spark, new_state_table)
     touched_set = set(touched)
     carry = [
         name
-        for b, names in _bucket_files(spark, old_loc).items()
+        for b, names in old_files.items()
         if b not in touched_set
         for name in names
     ]
-    _carry_files(spark, old_loc, new_loc, carry)
+    _carry_files(spark, old_loc, _table_location(spark, new_state_table), carry)
     spark.catalog.refreshTable(new_state_table)
     return spark.table(new_state_table)
 
@@ -345,17 +362,14 @@ def _carry_files(
             if not os.path.exists(dst):
                 os.link(os.path.join(old_local, name), dst)
         return
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    src_fs, _, jvm = hadoop_fs(spark, old_loc)
+    dst_fs, _, _ = hadoop_fs(spark, new_loc)
     hpath = jvm.org.apache.hadoop.fs.Path
-    file_util = jvm.org.apache.hadoop.fs.FileUtil
-    src_fs = hpath(old_loc).getFileSystem(conf)
-    dst_fs = hpath(new_loc).getFileSystem(conf)
     for name in names:
-        file_util.copy(
+        jvm.org.apache.hadoop.fs.FileUtil.copy(
             src_fs, hpath(posixpath.join(old_loc, name)),
             dst_fs, hpath(posixpath.join(new_loc, name)),
-            False, conf,
+            False, dst_fs.getConf(),
         )
 
 
@@ -383,16 +397,9 @@ def _carry_files(
 # write task holds one bucket's rows and `partitionBy("_mb")` yields one
 # file per touched bucket, sorted within by the PK. Reads assemble a plain
 # parquet scan from the manifest's file list; the merge join therefore
-# shuffles the TOUCHED fraction of the state (the "pruned-files" strategy
+# shuffles the TOUCHED fraction of the state (the pruned-files read
 # above) — at steady state (small deltas) that is the cheaper side of the
 # pruning/exchange-freedom trade anyway, and it is store-agnostic.
-
-
-def _hadoop_fs(spark: SparkSession, uri: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(uri)
-    return path.getFileSystem(conf), path, jvm
 
 
 def _fs_write_text(spark: SparkSession, uri: str, text: str) -> None:
@@ -400,7 +407,7 @@ def _fs_write_text(spark: SparkSession, uri: str, text: str) -> None:
     manifest is the version COMMIT record (atomic on local/HDFS; on
     object stores the rename is copy+delete but the visible object still
     appears all-or-nothing, which is the property the manifest needs)."""
-    fs, path, jvm = _hadoop_fs(spark, uri)
+    fs, path, jvm = hadoop_fs(spark, uri)
     tmp = jvm.org.apache.hadoop.fs.Path(uri + ".tmp")
     out = fs.create(tmp, True)
     try:
@@ -414,7 +421,7 @@ def _fs_write_text(spark: SparkSession, uri: str, text: str) -> None:
 
 
 def _fs_read_text(spark: SparkSession, uri: str) -> str:
-    fs, path, jvm = _hadoop_fs(spark, uri)
+    fs, path, jvm = hadoop_fs(spark, uri)
     stream = fs.open(path)
     try:
         reader = jvm.java.io.BufferedReader(
@@ -432,7 +439,7 @@ def _fs_read_text(spark: SparkSession, uri: str) -> str:
 
 
 def _fs_list_names(spark: SparkSession, uri: str) -> list[str]:
-    fs, path, _ = _hadoop_fs(spark, uri)
+    fs, path, _ = hadoop_fs(spark, uri)
     if not fs.exists(path):
         return []
     return [s.getPath().getName() for s in fs.listStatus(path)]
@@ -442,22 +449,27 @@ def _manifest_path(root: str, version: int) -> str:
     return posixpath.join(root, f"v{version:06d}", "manifest.json")
 
 
-def latest_state_version(spark: SparkSession, root: str) -> int | None:
-    """Highest COMMITTED version under ``root`` (None if empty). The
-    manifest file is the commit record: a merge that died between its
-    data write and its manifest write leaves a data-only ``v{n}/`` dir,
-    which must stay invisible — counting it would permanently wedge every
-    subsequent read and merge on a manifest that never landed, and the
-    retry of the failed merge overwrites the orphan data dir anyway."""
-    fs, _, jvm = _hadoop_fs(spark, root)
+def _committed_versions(spark: SparkSession, root: str) -> list[int]:
+    """Sorted COMMITTED versions under ``root``. The manifest file is the
+    commit record: a merge that died between its data write and its
+    manifest write leaves a data-only ``v{n}/`` dir, which must stay
+    invisible — counting it would permanently wedge every subsequent read
+    and merge on a manifest that never landed, and the retry of the failed
+    merge overwrites the orphan data dir anyway."""
+    fs, _, jvm = hadoop_fs(spark, root)
     hpath = jvm.org.apache.hadoop.fs.Path
-    versions = [
+    return sorted(
         v
         for name in _fs_list_names(spark, root)
         if re.fullmatch(r"v\d{6}", name)
         and fs.exists(hpath(_manifest_path(root, (v := int(name[1:])))))
-    ]
-    return max(versions) if versions else None
+    )
+
+
+def latest_state_version(spark: SparkSession, root: str) -> int | None:
+    """Highest committed version under ``root`` (None if empty)."""
+    versions = _committed_versions(spark, root)
+    return versions[-1] if versions else None
 
 
 def _load_manifest(spark: SparkSession, root: str, version: int) -> dict:
@@ -553,14 +565,11 @@ def read_state_manifest(
             raise ValueError(f"no state versions under {root!r}")
     m = _load_manifest(spark, root, version)
     schema = StructType.fromJson(__import__("json").loads(m["schema"]))
-    paths = [
+    return _read_files(spark, schema, [
         posixpath.join(root, rel)
         for b in sorted(m["buckets"])
         for rel in m["buckets"][b]
-    ]
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
+    ])
 
 
 def merge_into_state_manifest(
@@ -595,31 +604,18 @@ def merge_into_state_manifest(
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(m["schema"]))
-    changes = changes.repartition(n_buckets, *primary_key)
-    delta = last_change_per_key(changes, primary_key, op_col, seq_col).persist()
-    try:
-        touched = sorted(
-            r[0]
-            for r in delta.select(
-                bucket_id(primary_key, n_buckets).alias("_b")
-            ).distinct().collect()
-        )
-        touched_set = set(touched)
-        touched_paths = [
+    with _touched_delta(
+        changes, primary_key, n_buckets, op_col, seq_col
+    ) as (delta, touched):
+        state_touched = _read_files(spark, schema, [
             posixpath.join(root, rel)
             for b in touched
             for rel in m["buckets"].get(b, [])
-        ]
-        state_touched = (
-            spark.read.schema(schema).parquet(*touched_paths)
-            if touched_paths
-            else spark.createDataFrame([], schema)
-        )
+        ])
         merged = _merge_frames(state_touched, delta, primary_key)
         _write_bucket_data(merged, root, new_version, primary_key, n_buckets)
-    finally:
-        delta.unpersist()
 
+    touched_set = set(touched)
     new_files = _version_bucket_files(spark, root, new_version)
     buckets: dict[int, list[str]] = {}
     for b in range(n_buckets):
@@ -669,17 +665,10 @@ def gc_state_versions(
     """
     if keep_versions < 1:
         raise ValueError("keep_versions must be >= 1 — GC never deletes HEAD")
-    fs0, _, jvm0 = _hadoop_fs(spark, root)
-    hp0 = jvm0.org.apache.hadoop.fs.Path
     # committed versions only (manifest present): an orphan data-only dir
     # from a merge that died pre-commit is invisible here, exactly as it
     # is to latest_state_version — the retrying merge overwrites it
-    versions = sorted(
-        v
-        for name in _fs_list_names(spark, root)
-        if re.fullmatch(r"v\d{6}", name)
-        and fs0.exists(hp0(_manifest_path(root, (v := int(name[1:])))))
-    )
+    versions = _committed_versions(spark, root)
     if not versions:
         return {
             "kept_versions": [],
@@ -697,7 +686,7 @@ def gc_state_versions(
 
     deleted: list[str] = []
     retained: list[str] = []
-    fs, _, jvm = _hadoop_fs(spark, root)
+    fs, _, jvm = hadoop_fs(spark, root)
     hpath = jvm.org.apache.hadoop.fs.Path
     for v in dropped:
         own = _version_bucket_files(spark, root, v)

@@ -63,11 +63,18 @@ def date_path(day: datetime) -> str:
 _DATA_SUFFIXES = (".parquet", ".csv", ".csv.gz")
 
 
-def _fs(spark, root: str):
+def hadoop_fs(spark, uri: str):
+    """``(FileSystem, Path, jvm)`` for ``uri`` through Spark's Hadoop
+    configuration — the one place the package builds Hadoop FS handles, so
+    file://, hdfs:// and s3a:// paths all go through the same code."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(root)
-    return jvm, hpath, hpath.getFileSystem(conf)
+    path = jvm.org.apache.hadoop.fs.Path(uri)
+    return path.getFileSystem(conf), path, jvm
+
+
+def _entry(st) -> tuple[str, float]:
+    return st.getPath().toString(), st.getModificationTime() / 1000.0
 
 
 def _list_files_recursive(fs, hpath) -> list[tuple[str, float]]:
@@ -75,10 +82,9 @@ def _list_files_recursive(fs, hpath) -> list[tuple[str, float]]:
     it = fs.listFiles(hpath, True)  # recursive
     while it.hasNext():
         st = it.next()
-        p = st.getPath().toString()
         # DMS emits parquet or (by default) csv; ignore markers/manifests
-        if p.endswith(_DATA_SUFFIXES):
-            out.append((p, st.getModificationTime() / 1000.0))
+        if st.getPath().getName().endswith(_DATA_SUFFIXES):
+            out.append(_entry(st))
     return out
 
 
@@ -87,10 +93,14 @@ def _hadoop_list(spark, root: str) -> list[tuple[str, float]]:
 
     Works for file://, hdfs://, s3a:// alike. Returns [] for missing roots.
     """
-    jvm, hpath, fs = _fs(spark, root)
+    fs, hpath, _ = hadoop_fs(spark, root)
     if not fs.exists(hpath):
         return []
     return _list_files_recursive(fs, hpath)
+
+
+# digit widths of the YYYY / MM / DD folder levels
+_DATE_WIDTHS = (4, 2, 2)
 
 
 def _hadoop_list_date_narrowed(
@@ -117,11 +127,14 @@ def _hadoop_list_date_narrowed(
     folder's path date lower-bounds its files' modification times; the
     per-file ``mtime < stop_date`` filter downstream would drop them anyway.
 
-    Non-date entries under the root (no 4-digit-year folder) fall back to a
-    recursive listing of that subtree, preserving behavior for layouts
-    without date folders.
+    One descent over the year/month/day levels: data files at any level
+    are kept, a date folder is entered only while its (year[, month[,
+    day]]) prefix lies within the bounds' prefixes, an in-range day folder
+    is listed recursively, and a non-date dir at any level falls back to a
+    recursive listing of that subtree (layouts without date folders keep
+    their behavior).
     """
-    jvm, root_path, fs = _fs(spark, root)
+    fs, root_path, _ = hadoop_fs(spark, root)
     if not fs.exists(root_path):
         return []
     lo = (start_date.year, start_date.month, start_date.day)
@@ -132,47 +145,26 @@ def _hadoop_list_date_narrowed(
     )
     out: list[tuple[str, float]] = []
 
-    def _num(name: str, width: int) -> int | None:
-        return int(name) if len(name) == width and name.isdigit() else None
+    def walk(path, prefix: tuple[int, ...]) -> None:
+        width = _DATE_WIDTHS[len(prefix)]
+        for st in fs.listStatus(path):
+            name = st.getPath().getName()
+            if st.isFile():
+                if name.endswith(_DATA_SUFFIXES):
+                    out.append(_entry(st))
+            elif len(name) != width or not name.isdigit():
+                out.extend(_list_files_recursive(fs, st.getPath()))
+            else:
+                key = (*prefix, int(name))
+                k = len(key)
+                if not (lo[:k] <= key <= hi[:k]):
+                    continue
+                if k == len(_DATE_WIDTHS):
+                    out.extend(_list_files_recursive(fs, st.getPath()))
+                else:
+                    walk(st.getPath(), key)
 
-    for st_y in fs.listStatus(root_path):
-        name_y = st_y.getPath().getName()
-        if st_y.isFile():
-            if name_y.endswith(_DATA_SUFFIXES):
-                out.append(
-                    (st_y.getPath().toString(), st_y.getModificationTime() / 1000.0)
-                )
-            continue
-        y = _num(name_y, 4)
-        if y is None:  # non-date dir: recursive fallback
-            out.extend(_list_files_recursive(fs, st_y.getPath()))
-            continue
-        if not (lo[0] <= y <= hi[0]):
-            continue
-        for st_m in fs.listStatus(st_y.getPath()):
-            if st_m.isFile():
-                p = st_m.getPath().toString()
-                if p.endswith(_DATA_SUFFIXES):
-                    out.append((p, st_m.getModificationTime() / 1000.0))
-                continue
-            m = _num(st_m.getPath().getName(), 2)
-            if m is None:  # non-date dir inside a year dir: lossless fallback
-                out.extend(_list_files_recursive(fs, st_m.getPath()))
-                continue
-            if not (lo[:2] <= (y, m) <= hi[:2]):
-                continue
-            for st_d in fs.listStatus(st_m.getPath()):
-                if st_d.isFile():
-                    p = st_d.getPath().toString()
-                    if p.endswith(_DATA_SUFFIXES):
-                        out.append((p, st_d.getModificationTime() / 1000.0))
-                    continue
-                d = _num(st_d.getPath().getName(), 2)
-                if d is None:
-                    out.extend(_list_files_recursive(fs, st_d.getPath()))
-                    continue
-                if lo <= (y, m, d) <= hi:
-                    out.extend(_list_files_recursive(fs, st_d.getPath()))
+    walk(root_path, ())
     return out
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rust_cdc_validator_spark.sources.catalog import ENVELOPE_COLS, OP_COL
+from rust_cdc_validator_spark.sources.manifest import hadoop_fs
 
 # carried from _metadata by the stream so micro-batch ordering is total
 _SRC_FILE = "_src_file"
@@ -124,13 +125,9 @@ def _merge_batch(
         # so its stale partition dir must be dropped explicitly
         present = {r[0] for r in merged.select(_BUCKET).distinct().collect()}
         stale = [b for b in touched if b not in present]
-        if stale:
-            jvm = spark.sparkContext._jvm
-            conf = spark.sparkContext._jsc.hadoopConfiguration()
-            for b in stale:
-                p = jvm.org.apache.hadoop.fs.Path(f"{state_path}/{_BUCKET}={b}")
-                fs = p.getFileSystem(conf)
-                fs.delete(p, True)
+        for b in stale:
+            fs, p, _ = hadoop_fs(spark, f"{state_path}/{_BUCKET}={b}")
+            fs.delete(p, True)
 
 
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:

@@ -133,3 +133,12 @@ def test_validate_diffs_tables_concurrently(spark, tmp_path, monkeypatch):
     reports = v.validate(_payload(root), snaps, snaps)
     assert set(reports) == {"alpha", "beta"}
     assert all(r.is_match for r in reports.values())
+
+
+def test_payload_reads_num_of_buffers_when_built(monkeypatch):
+    """The table pool width follows NUM_OF_BUFFERS as set when each payload
+    is built, not as it was when the module was imported."""
+    monkeypatch.setenv("NUM_OF_BUFFERS", "3")
+    assert _payload("/nonexistent").max_parallel_tables == 3
+    monkeypatch.setenv("NUM_OF_BUFFERS", "5")
+    assert _payload("/nonexistent").max_parallel_tables == 5

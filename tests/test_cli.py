@@ -28,8 +28,35 @@ def bucket(tmp_path):
     return str(tmp_path / "bucket"), str(cat_path), str(tmp_path / "out"), expected
 
 
-def test_cli_snapshot_then_validate_match(spark, bucket):
+def _count_trace_points(monkeypatch) -> dict[str, int]:
+    """Wrap the module attributes the benchmark's traced runs patch
+    (perfbench/workloads.py) with call counters. Every call site must look
+    its attribute up at call time: one bound at import time bypasses the
+    patch, and the traced run then reports zero for its layer."""
+    from rust_cdc_validator_spark import api
+    from rust_cdc_validator_spark.operators import replay, state
+    from rust_cdc_validator_spark.sources import manifest
+
+    calls: dict[str, int] = {}
+    for mod, name in (
+        (api, "discover_files"), (api, "replay_snapshot"),
+        (api, "diff_tables"), (manifest, "discover_files"),
+        (replay, "with_sequence"), (state, "merge_into_state_touched"),
+    ):
+        key = f"{mod.__name__.rsplit('.', 1)[-1]}.{name}"
+        calls[key] = 0
+
+        def counted(*args, _fn=getattr(mod, name), _key=key, **kwargs):
+            calls[_key] += 1
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(mod, name, counted)
+    return calls
+
+
+def test_cli_snapshot_then_validate_match(spark, bucket, monkeypatch):
     root, cat, out, expected = bucket
+    calls = _count_trace_points(monkeypatch)
     rc = main([
         "--bucket-root", root, "--database", "db", "--schema", "public",
         "--catalog-json", cat, "--start-date", "2024-01-01",
@@ -45,6 +72,9 @@ def test_cli_snapshot_then_validate_match(spark, bucket):
         "--output", out, "--only-datadiff", "--source-root", out,
     ])
     assert rc2 == 0  # MATCH → exit 0
+    for point in ("api.discover_files", "api.replay_snapshot",
+                  "replay.with_sequence", "api.diff_tables"):
+        assert calls[point] > 0, point
 
 
 def test_cli_validate_mismatch_exit_code(spark, bucket):
@@ -103,9 +133,10 @@ def test_missing_required_args_error_names_interactive(capsys):
     assert "--interactive" in capsys.readouterr().err
 
 
-def test_cli_advance_state(spark, bucket):
+def test_cli_advance_state(spark, bucket, monkeypatch):
     """--advance-state moves a seeded bucketed state forward over the
-    window (empty future window here: version forward, stamped) and
+    window (an empty future window: version forward, stamped; then the
+    window of every CDC file, whose changes the state already holds) and
     requires exactly one included table."""
     import uuid
 
@@ -123,7 +154,7 @@ def test_cli_advance_state(spark, bucket):
         start_date="2024-01-01T00:00:00Z",
     ))["customers"]
     v0 = f"cli_state_{uuid.uuid4().hex[:8]}"
-    v1 = f"{v0}_v1"
+    v1, v2 = f"{v0}_v1", f"{v0}_v2"
     try:
         save_state_bucketed(snap, v0, ["id"], n_buckets=4)
         rc = main([
@@ -137,6 +168,19 @@ def test_cli_advance_state(spark, bucket):
         assert got == sorted(map(tuple, snap.collect()))
         assert v.state_window(v1)["start"].year == 2099
 
+        calls = _count_trace_points(monkeypatch)
+        rc = main([
+            "--bucket-root", root, "--database", "db", "--schema", "public",
+            "--catalog-json", cat, "--start-date", "2024-01-01",
+            "--stop-date", "2999-01-01", "--included-tables", "customers",
+            "--advance-state", v1, v2,
+        ])
+        assert rc == 0
+        assert sorted(map(tuple, spark.table(v2).collect())) == got
+        for point in ("manifest.discover_files", "replay.with_sequence",
+                      "state.merge_into_state_touched"):
+            assert calls[point] > 0, point
+
         with pytest.raises(SystemExit):
             main([
                 "--bucket-root", root, "--database", "db", "--schema", "public",
@@ -144,7 +188,7 @@ def test_cli_advance_state(spark, bucket):
                 "--advance-state", v0, v1,  # no --included-tables
             ])
     finally:
-        for t in (v0, v1):
+        for t in (v0, v1, v2):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 

@@ -193,6 +193,7 @@ def test_user_columns_named_like_internal_columns_survive(spark):
     nopk = diff_tables(a.drop("pk"), b.drop("pk"), [])
     assert nopk.details["rows_only_in_source"] == 1
     assert nopk.details["rows_only_in_target"] == 1
+    assert not nopk.is_match  # equal counts, different rows
     assert nopk.rows_only_in_source.columns == ["_row_hash", "_chunk", "_side"]
     # Spark resolves names case-insensitively: _SIDE collides with _side
     upper = [df.drop("pk").withColumnRenamed("_side", "_SIDE") for df in (a, b)]

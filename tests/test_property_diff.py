@@ -141,3 +141,6 @@ def test_no_pk_counts_equal_except_all(src_rows, tgt_rows):
     assert (rep.source_count, rep.target_count) == (len(src_rows), len(tgt_rows))
     assert rep.details["rows_only_in_source"] == src.exceptAll(tgt).count()
     assert rep.details["rows_only_in_target"] == tgt.exceptAll(src).count()
+    assert rep.is_match == (
+        src.exceptAll(tgt).count() == 0 == tgt.exceptAll(src).count()
+    )

@@ -162,6 +162,34 @@ def test_date_narrowed_listing_non_date_dirs_fall_back(spark, tmp_path):
     assert any(e.path.endswith("part-0.parquet") for e in entries)
 
 
+def test_date_narrowed_listing_year_and_month_levels(spark, tmp_path):
+    """Year and month levels of the date walk: data files directly in a
+    year or month dir are kept, non-date dirs inside them are listed
+    recursively, and months of the same year outside [start, stop] are
+    pruned. Every mtime is inside the window, so survivors are the
+    listing decision alone."""
+    import os
+    import time
+
+    cols = ["Op", "_dms_ingestion_timestamp", "id", "v"]
+    root = str(tmp_path / "db/public/t")
+    kept = ["LOAD00000001.parquet", "2024/in_year.parquet",
+            "2024/03/in_month.parquet", "2024/extra/in_year_dir.parquet",
+            "2024/03/extra/in_month_dir.parquet", "2024/04/15/mid.parquet"]
+    pruned = ["2024/01/05/month_before.parquet", "2024/07/01/month_after.parquet"]
+    inside = time.mktime((2024, 4, 1, 0, 0, 0, 0, 0, 0))
+    for rel in kept + pruned:
+        write_cdc_file(f"{root}/{rel}",
+                       [{"Op": "U", "_dms_ingestion_timestamp": "t", "id": 1, "v": 2}], cols)
+        os.utime(f"{root}/{rel}", (inside, inside))
+    entries = discover_files(
+        spark, root, FileMode.DATE_AWARE,
+        start_date=datetime(2024, 3, 10, tzinfo=timezone.utc),
+        stop_date=datetime(2024, 5, 20, tzinfo=timezone.utc),
+    )
+    assert {e.path.split("/db/public/t/", 1)[1] for e in entries} == set(kept)
+
+
 def test_absolute_path_mode(spark, tmp_path):
     cols = ["Op", "_dms_ingestion_timestamp", "id", "v"]
     root = str(tmp_path / "db/public/t")

@@ -265,24 +265,37 @@ def test_touched_merge_fully_deleted_bucket_writes_no_file(spark, state_table):
 
 
 def test_touched_merge_read_strategies_equivalent(spark, state_table):
-    """pruned-files (reads only touched buckets' files, re-shuffles the
-    touched fraction) and bucketed-scan (full exchange-free scan) produce
-    identical state; auto picks pruned-files under the threshold."""
+    """Both state reads of the touched merge give the state
+    ``merge_into_state`` gives: pruned files (the delta touches at most ¼ of
+    the buckets) and the exchange-free bucketed scan (more than ¼). The
+    delta's size picks the read."""
     state0 = net_effect(
         _log(spark, [(i, f"v{i}", None, i) for i in range(200)]), ["id"]
     )
     save_state_bucketed(state0, state_table, ["id"], n_buckets=8)
-    delta_rows = [(1, "x", "U", 500), (2, None, "D", 501), (300, "n", "I", 502)]
+    by_bucket: dict[int, list[int]] = {}
+    for r in spark.range(0, 400).select(
+        "id", bucket_id(["id"], 8).alias("b")
+    ).orderBy("id").collect():
+        by_bucket.setdefault(r["b"], []).append(r["id"])
+    old = [k for k in by_bucket[0] if k < 200]
+    new = [k for k in by_bucket[0] if k >= 200]
+    narrow = [(old[0], "x", "U", 500), (old[1], None, "D", 501),
+              (new[0], "n", "I", 502)]
+    wide = [(by_bucket[b][0], f"w{b}", "U", 600 + b) for b in range(8)]
+    wide.append((by_bucket[3][1], None, "D", 700))
 
-    pruned = merge_into_state_touched(
-        spark, state_table, _log(spark, delta_rows), ["id"],
-        f"{state_table}_v2", read_strategy="pruned-files",
-    )
-    scan = merge_into_state_touched(
-        spark, state_table, _log(spark, delta_rows), ["id"],
-        f"{state_table}_v3", read_strategy="bucketed-scan",
-    )
-    assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, scan.collect()))
+    def touched(rows):
+        return _log(spark, rows).select(bucket_id(["id"], 8)).distinct().count()
+
+    assert 4 * touched(narrow) <= 8 < 4 * touched(wide)
+    for rows, new_table in ((narrow, f"{state_table}_v2"),
+                            (wide, f"{state_table}_v3")):
+        got = merge_into_state_touched(
+            spark, state_table, _log(spark, rows), ["id"], new_table
+        )
+        want = merge_into_state(spark, state_table, _log(spark, rows), ["id"])
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_dropping_old_version_leaves_linked_version_readable(spark, state_table):

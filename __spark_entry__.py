@@ -29,16 +29,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Coverage note (VERDICT r4 #8): this returns the FULL catalog (100
-    queries). The driver's CORRECTNESS_r{N}.json has enumerated a fixed
-    50-query subset since round 2 — that set is the driver's, not ours to
-    configure from here. The queries the snapshot doesn't reach are gated
-    by the same DuckDB comparison in-repo: tests/test_oracle_catalog.py
-    runs the WHOLE catalog at sf0.001 in pytest, and
-    ``python tools/check_oracle.py`` replicates the driver's gate for all
-    oracled queries at sf0.01."""
+    """The catalog: exactly the 50 queries that CORRECTNESS_r{N}.json
+    checks. tests/test_oracle_catalog.py runs every oracled query against
+    DuckDB at sf0.001 in pytest, ``python tools/check_oracle.py`` runs the
+    same comparison at sf0.01, and tests/test_goldens_sketch_ops.py pins
+    the six rows-only sketch queries."""
     return dict(QUERIES)
 
 

@@ -11,11 +11,14 @@ so Catalyst/Tungsten pick the physical strategy and the whole thing scales to
 a real cluster.
 
 Layout:
-    sources/    file-manifest discovery (DMS S3 layout), catalog/DDL bridge, JDBC
-    operators/  CDC replay, table diff (validator), dedup, similarity, multimodal
+    sources/    file-manifest discovery (DMS S3 layout), catalog/DDL bridge, JDBC,
+                corpus IO
+    operators/  CDC replay, table diff (validator), bucketed state store, dedup,
+                similarity, corpus, multimodal
     functions/  text analysis, hashing (minhash/simhash), vector math
     plans/      plan-inspection helpers (pushdown / join-strategy assertions)
     streaming/  incremental CDC replay via Structured Streaming
+    queries.py  the 50-query correctness catalog with its DuckDB oracle SQL
 """
 
 from rust_cdc_validator_spark.api import CdcValidator  # noqa: F401

@@ -10,11 +10,3 @@ from rust_cdc_validator_spark.operators.state import (  # noqa: F401
     merge_into_state_touched,
     save_state_bucketed,
 )
-from rust_cdc_validator_spark.operators.drift import (  # noqa: F401
-    drift_report,
-    psi_drift,
-)
-from rust_cdc_validator_spark.operators.expect import (  # noqa: F401
-    Expectation,
-    expect_report,
-)

@@ -2,6 +2,3 @@ from rust_cdc_validator_spark.streaming.incremental import (  # noqa: F401
     incremental_replay,
     start_incremental_replay,
 )
-from rust_cdc_validator_spark.streaming.index import (  # noqa: F401
-    maintain_minhash_index,
-)

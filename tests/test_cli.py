@@ -133,6 +133,31 @@ def test_missing_required_args_error_names_interactive(capsys):
     assert "--interactive" in capsys.readouterr().err
 
 
+def test_cli_import_loads_only_the_cdc_core():
+    """Importing the CLI must not pull in the catalog or the corpus, drift
+    and quality operators; the subcommands that need them import lazily."""
+    import os
+    import subprocess
+    import sys
+
+    lazy = [
+        "operators.drift", "operators.expect", "operators.layout",
+        "operators.corpus", "operators.multimodal", "operators.similarity",
+        "queries",
+    ]
+    code = (
+        "import sys, rust_cdc_validator_spark.__main__; "
+        f"print([m for m in {lazy!r} "
+        "if 'rust_cdc_validator_spark.' + m in sys.modules])"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    assert out.strip() == "[]"
+
+
 def test_cli_advance_state(spark, bucket, monkeypatch):
     """--advance-state moves a seeded bucketed state forward over the
     window (an empty future window: version forward, stamped; then the

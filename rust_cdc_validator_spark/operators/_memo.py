@@ -31,8 +31,9 @@ _CACHE: dict[tuple, Any] = {}
 
 
 def _norm_path(p: str) -> str:
-    """Scheme-qualified paths only lose the trailing slash (normpath
-    would mangle ``s3://``); local paths are normalized."""
+    """Same normalization as graphstate._norm_state_path (duplicated to
+    keep this module import-free): scheme-qualified paths only lose the
+    trailing slash (normpath would mangle ``s3://``)."""
     if "://" in p:
         return p.rstrip("/")
     return posixpath.normpath(p)

@@ -1699,11 +1699,12 @@ def tfidf_keywords(
     rounded to 6 places for engine-portable comparison.
 
     Scale shape: one explode + one (doc, token) aggregation; document
-    frequency is a count window over the SAME relation (a groupBy-join
-    formulation plans a second corpus scan). The per-doc top-k is a
-    bounded window. ``n_docs`` skips the corpus count job when the caller
-    already knows it (standing-pipeline contract, same as
-    ``write_corpus_shards``'s ``total_rows``).
+    frequency is a count window over the SAME relation (the single-scan
+    trick ``retrieval.bm25_topk`` documents — a groupBy-join formulation
+    plans a second corpus scan). The per-doc top-k is a bounded window.
+    ``n_docs`` skips the corpus count job when the caller already knows it
+    (standing-pipeline contract, same as ``write_corpus_shards``'s
+    ``total_rows``).
     """
     if n_docs is None:
         n_docs = df.count()

@@ -780,8 +780,9 @@ def psi_baseline(
     """The PSI reference histogram as a persistable RELATION —
     (bin, bin_lo, width, share_before) over ``bins`` fixed-width
     buckets of ``df``'s [min, max] — built ONCE from the training
-    snapshot so every later compare (:func:`psi_drift` shape) scores
-    against the SAME edges. Bins with no mass keep a zero-share row (the grid
+    snapshot so every later compare (batch :func:`psi_drift` shape, or
+    the live ``streaming.windows.psi_stream`` monitor) scores against
+    the SAME edges. Bins with no mass keep a zero-share row (the grid
     is complete — a consumer can compile it without re-deriving edges).
 
     Scale shape: one min/max aggregate (two doubles to the driver), one

@@ -222,8 +222,9 @@ def prefix_max(
     partition-local window, per-partition maxima scanned exclusively and
     broadcast back as offsets (combined with ``greatest``). The first row
     gets NULL (max has no identity element, unlike sum's 0). Same
-    tie-free-order contract. Feeds running-record computations (rows
-    beating every predecessor's best)."""
+    tie-free-order contract. Feeds running-record computations — e.g. the
+    2-D Pareto frontier (operators/pareto.py) keeps rows beating every
+    predecessor's best."""
     parts = num_ranges or df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "32"
     )

@@ -120,7 +120,9 @@ def hll_sketch(
 
 def hll_index_rank(col: Column, p: int) -> tuple[Column, Column]:
     """The map-side HLL arithmetic as a (register index, rank) column
-    pair used by :func:`hll_sketch`. Rank of the
+    pair — shared by :func:`hll_sketch` and the streaming state fold
+    (streaming/windows.distinct_count_stateful) so streaming registers
+    stay bit-identical to batch sketches of the same rows. Rank of the
     first 1-bit in the tail window is 1-based from the left; all-zero
     tail -> tail+1. bin() length = floor(log2(w))+1 for w>0, exact
     integer string arithmetic — no float log anywhere. NULL input

@@ -7,8 +7,9 @@ have scale traps this module closes:
 * READ: never infer a JSONL schema at scale — inference is an extra full
   pass over the data before the real read. The reader REQUIRES an explicit
   schema and runs PERMISSIVE with a corrupt-record column, so one malformed
-  line among billions quarantines instead of failing the job (errors are
-  data, not exceptions).
+  line among billions quarantines instead of failing the job (DMS-parquet's
+  sibling contract in ``sources/resilient.py``: errors are data, not
+  exceptions).
 * WRITE: downstream training loaders want shards of a target size, not
   whatever ``spark.sql.shuffle.partitions`` happened to be. The writer
   estimates bytes from a BOUNDED sample (never a full materialization),
@@ -61,8 +62,8 @@ def split_json_lines(
     corrupt_col: str = CORRUPT_COL,
 ) -> tuple[DataFrame, DataFrame]:
     """Split a text-lines DataFrame (column ``value`` — batch OR streaming)
-    into (good, quarantined) under ``schema``. The parse core of
-    ``read_jsonl_corpus``.
+    into (good, quarantined) under ``schema``. The shared parse core of
+    ``read_jsonl_corpus`` and ``streaming.ingest.stream_jsonl_corpus``.
 
     Parses through from_json (the same Jackson parser with the same
     PERMISSIVE options the json source uses) rather than spark.read.json:

@@ -46,7 +46,9 @@ _BUCKET = "_bucket"
 def batch_net_effect(batch: DataFrame, primary_key: list[str]) -> DataFrame:
     """Within-batch net effect: last change per key wins, ordered by
     ingestion timestamp with (is_cdc, file_path, row_index) as the
-    tiebreaker (see the _merge_batch docstring for why each leg exists)."""
+    tiebreaker (see the _merge_batch docstring for why each leg exists).
+    Shared by the parquet-state merge and the JDBC apply sink
+    (streaming/jdbc_apply.py) so both realize identical semantics."""
     order_cols = [F.col("_dms_ingestion_timestamp").desc_nulls_last()]
     meta_cols = [c for c in (_SRC_FILE, _SRC_ROW) if c in batch.columns]
     if _SRC_FILE in batch.columns:

@@ -70,3 +70,32 @@ def test_minimax_equals_pava(bins):
     n = [w for w, _ in bins]
     pos = [min(p, w) for w, p in bins]
     assert minimax_per_bin(pos, n) == pava_per_bin(pos, n)
+
+
+def test_catalog_isotonic_fit_invariants(spark):
+    """On sf0.001 events: the fitted curve is non-decreasing, pool means
+    are preserved (every maximal constant run's fit equals its pooled
+    rate), and the Spark fit equals sequential PAVA on the same bins."""
+    from rust_cdc_validator_spark.queries import QUERIES
+
+    rows = sorted(
+        QUERIES["events_isotonic_calibration"](
+            spark, "/root/testdata/sf0.001"
+        ).collect(),
+        key=lambda r: r["bin"],
+    )
+    fits = [r["fit_r"] for r in rows]
+    assert fits == sorted(fits)  # isotonic
+    exact = pava_per_bin([r["pos"] for r in rows], [r["n"] for r in rows])
+    for r, e in zip(rows, exact):
+        assert abs(r["fit_r"] - float(e)) < 1e-6
+    # mean preservation per maximal constant run
+    i = 0
+    while i < len(rows):
+        j = i
+        while j + 1 < len(rows) and fits[j + 1] == fits[i]:
+            j += 1
+        pool_pos = sum(r["pos"] for r in rows[i : j + 1])
+        pool_n = sum(r["n"] for r in rows[i : j + 1])
+        assert abs(fits[i] - pool_pos / pool_n) < 1e-5
+        i = j + 1

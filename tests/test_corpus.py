@@ -338,6 +338,25 @@ def test_percentile_profile_matches_quantity_percentiles_catalog(spark):
     assert got == want
 
 
+def test_source_mixture_weights_rebalance_to_uniform(spark):
+    """Applying the emitted weight to each source's token mass must land
+    every source exactly on the uniform target share — the defining
+    property of a mixture-rebalancing pass — and the weighted token total
+    must be conserved (sum of target shares = 1)."""
+    import os
+
+    from rust_cdc_validator_spark import queries as Q
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
+    rows = Q.source_mixture_weights(spark, sf_dir).collect()
+    assert len(rows) >= 2
+    for r in rows:
+        assert r["weight"] > 0
+        # resampled share = actual share * weight = target share
+        assert abs(r["token_share"] * r["weight"] - r["target_share"]) < 1e-12
+    assert abs(sum(r["token_share"] * r["weight"] for r in rows) - 1.0) < 1e-9
+
+
 # ------------------------------------------- DSIR importance weights
 
 def _dsir_frames(spark):

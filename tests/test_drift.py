@@ -195,6 +195,49 @@ def test_mutual_information_hand_computed_and_grouped(spark):
     assert abs(out["h"]["mi_nats"]) < 1e-12
 
 
+def test_changepoint_amoc_planted_shift(spark):
+    from rust_cdc_validator_spark.operators.timeseries import changepoint_amoc
+
+    # level shift at index 10: 0..9 -> ~1.0, 10..19 -> ~5.0 (small wiggle)
+    rows = []
+    for i in range(20):
+        base = 1.0 if i < 10 else 5.0
+        rows.append(("a", i, base + (0.01 * (i % 3))))
+    # control series with no shift
+    rows += [("b", i, 2.0 + 0.01 * (i % 2)) for i in range(20)]
+    df = spark.createDataFrame(rows, "grp string, day int, v double")
+    out = {r["grp"]: r for r in changepoint_amoc(df, ["grp"], "day", "v").collect()}
+    a = out["a"]
+    assert a["cut_index"] == 10 and a["cut_point"] == 9  # cut AFTER day 9
+    assert a["mean_before"] < 1.1 and a["mean_after"] > 4.9
+    assert a["shift_stat"] > out["b"]["shift_stat"] * 10
+    assert a["n_points"] == 20
+
+
+def test_changepoint_amoc_matches_bruteforce(spark):
+    import math
+    import random as _r
+
+    from rust_cdc_validator_spark.operators.timeseries import changepoint_amoc
+
+    rng = _r.Random(3)
+    vals = [rng.random() for _ in range(15)]
+    best = None
+    n = len(vals)
+    for t in range(1, n):
+        mb = sum(vals[:t]) / t
+        ma = sum(vals[t:]) / (n - t)
+        d = abs(mb - ma) * math.sqrt(t * (n - t) / n)
+        if best is None or d > best[1] + 1e-15:
+            best = (t, d)
+    df = spark.createDataFrame(
+        [("g", i, v) for i, v in enumerate(vals)], "grp string, day int, v double"
+    )
+    got = changepoint_amoc(df, ["grp"], "day", "v").first()
+    assert got["cut_index"] == best[0]
+    assert abs(got["shift_stat"] - round(best[1], 6)) < 1e-9
+
+
 # ---------------------------------------------------------------------------
 # Chi-squared independence (r9)
 # ---------------------------------------------------------------------------

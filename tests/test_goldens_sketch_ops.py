@@ -35,6 +35,23 @@ SKETCH_QUERIES = [
     "ann_ivf_top1",
     "ann_ivfpq_top1",
     "dedup_clusters_docs",
+    "embedding_near_dup_docs",
+    "embedding_near_dup_narrow",
+    "semantic_dedup_docs",
+    "bpe_vocab_docs",
+    "training_corpus_neardup",
+    "lsh_bucket_overflow_stats",
+    "minhash_band_overflow_stats",
+    "minhash_index_probe",
+    "lsh_index_probe",
+    "contamination_bloom_docs",
+    "mmr_rerank_docs",
+    "ann_recall_report",
+    "dedup_cluster_histogram",
+    "docs_lsh_planned_neardup",
+    "bpe_token_budget",
+    "embedding_pca_whiten",
+    "trade_betweenness",
 ]
 
 

@@ -1,6 +1,8 @@
 """Round-7 additions: quantile-histogram sketch (operators/sketch.py),
-weighted priority sampling (operators/corpus.py), and the robust MAD
-outlier screen (operators/drift.py)."""
+blocked fuzzy linkage (operators/linkage.py), cohort retention + path
+n-grams (operators/timeseries.py), weighted priority sampling
+(operators/corpus.py), and the robust MAD outlier screen
+(operators/drift.py)."""
 
 from __future__ import annotations
 
@@ -12,10 +14,18 @@ from pyspark.sql import functions as F
 
 from rust_cdc_validator_spark.operators.corpus import weighted_priority_sample
 from rust_cdc_validator_spark.operators.drift import robust_outliers
+from rust_cdc_validator_spark.operators.linkage import (
+    block_size_stats,
+    blocked_fuzzy_pairs,
+)
 from rust_cdc_validator_spark.operators.sketch import (
     q_histogram,
     q_histogram_merge,
     q_quantiles,
+)
+from rust_cdc_validator_spark.operators.timeseries import (
+    event_path_ngrams,
+    retention_cohorts,
 )
 
 
@@ -72,6 +82,81 @@ def test_qh_negative_raises(spark):
     )
     with pytest.raises(Exception, match="negative"):
         q_histogram(df, ["g"], "v", s=5).collect()
+
+
+# ----------------------------------------------------------------- linkage
+
+def _people(spark):
+    rows = [
+        (1, "blk", "jon smith"),
+        (2, "blk", "john smith"),   # dist 1 to jon smith
+        (3, "blk", "jane smythe"),
+        (4, "blk", "completely different"),
+        (5, "other", "jon smith"),  # same name, different block: never paired
+    ]
+    return spark.createDataFrame(rows, "id int, blk string, name string")
+
+
+def test_fuzzy_pairs_within_block_only(spark):
+    pairs = blocked_fuzzy_pairs(_people(spark), ["blk"], "id", "name", 2)
+    got = {(r["id_a"], r["id_b"], r["dist"]) for r in pairs.collect()}
+    assert got == {(1, 2, 1)}
+
+
+def test_fuzzy_pairs_block_cap_truncates_deterministically(spark):
+    """A block over max_block keeps its first max_block ids — the
+    degenerate-block escape hatch, observable via block_size_stats."""
+    rows = [(i, "b", f"name{i:04d}") for i in range(10)]
+    df = spark.createDataFrame(rows, "id int, blk string, name string")
+    capped = blocked_fuzzy_pairs(df, ["blk"], "id", "name", 50, max_block=4)
+    ids = {r["id_a"] for r in capped.collect()} | {
+        r["id_b"] for r in capped.collect()
+    }
+    assert ids == {0, 1, 2, 3}
+    stats = block_size_stats(df, ["blk"], max_block=4).collect()[0]
+    assert stats["block_rows"] == 10 and stats["overflows"] and stats["rows_cut"] == 6
+
+
+# -------------------------------------------------------------- timeseries
+
+def test_retention_cohorts_exact_counts(spark):
+    rows = [
+        # cohort week of 2024-01-01: users a, b. a returns week 1, b doesn't.
+        ("a", "2024-01-02 10:00:00"),
+        ("a", "2024-01-09 10:00:00"),
+        ("b", "2024-01-03 10:00:00"),
+        # cohort week of 2024-01-08: user c only.
+        ("c", "2024-01-10 10:00:00"),
+    ]
+    df = spark.createDataFrame(rows, "u string, ts string").select(
+        "u", F.col("ts").cast("timestamp").alias("ts")
+    )
+    got = {
+        (str(r["cohort"]), r["age"]): (r["n_users"], r["cohort_size"], r["retention"])
+        for r in retention_cohorts(df, "u", "ts", "week").collect()
+    }
+    assert got == {
+        ("2024-01-01", 0): (2, 2, 1.0),
+        ("2024-01-01", 1): (1, 2, 0.5),
+        ("2024-01-08", 0): (1, 1, 1.0),
+    }
+
+
+def test_retention_bad_bucket_raises(spark):
+    df = spark.createDataFrame([("a", "2024-01-01")], "u string, ts string")
+    with pytest.raises(ValueError, match="bucket"):
+        retention_cohorts(df, "u", "ts", "quarter")
+
+
+def test_path_ngrams_counts_and_tail_exclusion(spark):
+    rows = [
+        ("u1", 1, "a"), ("u1", 2, "b"), ("u1", 3, "c"), ("u1", 4, "b"),
+        ("u2", 1, "a"), ("u2", 2, "b"),  # too short for a trigram
+    ]
+    df = spark.createDataFrame(rows, "u string, ts long, t string")
+    got = {r["path"]: r["n_paths"] for r in
+           event_path_ngrams(df, "u", "ts", "t", 3).collect()}
+    assert got == {"a -> b -> c": 1, "b -> c -> b": 1}
 
 
 # ---------------------------------------------------- weighted sampling
@@ -142,3 +227,97 @@ def test_robust_outliers_degenerate_mad(spark):
     df = spark.createDataFrame([("g", v) for v in vals], "g string, v double")
     r = robust_outliers(df, ["g"], "v").collect()[0]
     assert r["mad"] == 0.0 and r["n_outliers"] == 2
+
+
+def test_sorted_neighborhood_window_and_dist(spark):
+    from rust_cdc_validator_spark.operators.linkage import (
+        sorted_neighborhood_pairs,
+    )
+
+    rows = [
+        (1, "alpha"),
+        (2, "alphb"),   # dist 1 from alpha, adjacent in sort
+        (3, "alzzz"),   # dist > 2 from both
+        (4, "beta"),    # different first letter -> different default block
+        (5, "betb"),    # dist 1 from beta
+    ]
+    df = spark.createDataFrame(rows, "id long, name string")
+    got = {
+        (r["id_a"], r["id_b"]): r["dist"]
+        for r in sorted_neighborhood_pairs(df, ["name"], "id", "name", 2).collect()
+    }
+    assert got == {(1, 2): 1, (4, 5): 1}
+
+
+def test_sorted_neighborhood_window_cap_limits_pairs(spark):
+    from rust_cdc_validator_spark.operators.linkage import (
+        sorted_neighborhood_pairs,
+    )
+
+    # 4 identical-prefix names: window=1 pairs only adjacent rows
+    rows = [(i, f"aaa{i}") for i in range(4)]
+    df = spark.createDataFrame(rows, "id long, name string")
+    got = sorted_neighborhood_pairs(
+        df, ["name"], "id", "name", max_dist=2, window=1
+    ).collect()
+    assert {(r["id_a"], r["id_b"]) for r in got} == {(0, 1), (1, 2), (2, 3)}
+    got3 = sorted_neighborhood_pairs(
+        df, ["name"], "id", "name", max_dist=2, window=3
+    ).collect()
+    assert len(got3) == 6  # all within-window pairs of 4 rows
+
+
+def test_sorted_neighborhood_validates(spark):
+    import pytest
+
+    from rust_cdc_validator_spark.operators.linkage import (
+        sorted_neighborhood_pairs,
+    )
+
+    df = spark.createDataFrame([(1, "a")], "id long, name string")
+    with pytest.raises(ValueError, match="max_dist"):
+        sorted_neighborhood_pairs(df, ["name"], "id", "name", -1)
+    with pytest.raises(ValueError, match="window"):
+        sorted_neighborhood_pairs(df, ["name"], "id", "name", 1, window=0)
+
+
+def test_golden_records_election_and_singletons(spark):
+    from pyspark.sql import functions as F
+
+    from rust_cdc_validator_spark.operators.linkage import golden_records
+
+    people = spark.createDataFrame(
+        [
+            (1, "ann", 10.0),
+            (2, "anne", 50.0),   # linked to 1+3: highest balance -> canonical
+            (3, "annie", 30.0),
+            (4, "bob", 99.0),    # singleton
+        ],
+        "id long, name string, bal double",
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    out = {
+        r["id"]: r
+        for r in golden_records(people, pairs, "id", [F.desc("bal")]).collect()
+    }
+    assert {i: out[i]["entity_id"] for i in (1, 2, 3, 4)} == {1: 1, 2: 1, 3: 1, 4: 4}
+    assert out[1]["entity_size"] == 3 and out[4]["entity_size"] == 1
+    assert [i for i in out if out[i]["is_canonical"]] == [2, 4] or sorted(
+        i for i in out if out[i]["is_canonical"]
+    ) == [2, 4]
+
+
+def test_golden_records_tiebreak_on_id(spark):
+    from pyspark.sql import functions as F
+
+    from rust_cdc_validator_spark.operators.linkage import golden_records
+
+    people = spark.createDataFrame(
+        [(7, 1.0), (9, 1.0)], "id long, bal double"  # equal priority
+    )
+    pairs = spark.createDataFrame([(7, 9)], "id_a long, id_b long")
+    out = {
+        r["id"]: r["is_canonical"]
+        for r in golden_records(people, pairs, "id", [F.desc("bal")]).collect()
+    }
+    assert out == {7: True, 9: False}  # lower id wins ties

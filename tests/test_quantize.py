@@ -1,8 +1,133 @@
 from __future__ import annotations
 
+import math
+
+import pytest
 from pyspark.sql import functions as F
 
 from rust_cdc_validator_spark.functions.text import strip_markup
+from rust_cdc_validator_spark.operators.quantize import (
+    sq8_decode,
+    sq8_encode,
+    sq8_error_report,
+    sq8_fit,
+    sq8_refit_needed,
+)
+
+
+@pytest.fixture(scope="module")
+def vecs(spark):
+    rows = [
+        (1, [0.0, 10.0, 5.0], "a"),
+        (2, [1.0, 20.0, 5.0], "a"),
+        (3, [0.5, 15.0, 5.0], "b"),
+        (4, [0.25, 12.5, 5.0], "b"),
+    ]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label string"
+    )
+
+
+def test_fit_bounds(vecs):
+    bounds = sq8_fit(vecs, "embedding")
+    assert bounds == [(0.0, 1.0), (10.0, 20.0), (5.0, 5.0)]
+
+
+def test_roundtrip_error_bound(vecs):
+    bounds = sq8_fit(vecs, "embedding")
+    out = vecs.select(
+        "embedding",
+        sq8_decode(sq8_encode(F.col("embedding"), bounds), bounds).alias("deq"),
+    ).collect()
+    for r in out:
+        for d, (v, q) in enumerate(zip(r["embedding"], r["deq"])):
+            lo, hi = bounds[d]
+            half_step = (hi - lo) / 255.0 / 2.0
+            assert abs(v - q) <= half_step + 1e-12, (d, v, q)
+
+
+def test_degenerate_dim_exact(vecs):
+    # dim 2 is constant 5.0: codes 0, decode == lo exactly, zero error
+    bounds = sq8_fit(vecs, "embedding")
+    row = vecs.select(
+        sq8_encode(F.col("embedding"), bounds).alias("c"),
+        sq8_decode(sq8_encode(F.col("embedding"), bounds), bounds).alias("d"),
+    ).first()
+    assert row["c"][2] == 0
+    assert row["d"][2] == 5.0
+
+
+def test_clamp_out_of_range(spark, vecs):
+    # encoding NEW vectors against old bounds saturates, never wraps
+    bounds = sq8_fit(vecs, "embedding")
+    newer = spark.createDataFrame(
+        [(9, [-5.0, 100.0, 7.0])], "vec_id long, embedding array<double>"
+    )
+    code = newer.select(sq8_encode(F.col("embedding"), bounds).alias("c")).first()["c"]
+    assert code[0] == 0 and code[1] == 255
+    assert code[2] == 0  # degenerate dim stays 0 whatever the value
+
+
+def test_error_report_grouped(vecs):
+    bounds = sq8_fit(vecs, "embedding")
+    rep = {
+        r["label"]: r
+        for r in sq8_error_report(vecs, "embedding", bounds, ["label"]).collect()
+    }
+    assert rep["a"]["n_vectors"] == 2 and rep["b"]["n_vectors"] == 2
+    for r in rep.values():
+        assert 0.0 <= r["mse"] <= ((20.0 - 10.0) / 255.0 / 2.0) ** 2 + 1e-12
+        assert r["max_abs_err"] <= (20.0 - 10.0) / 255.0 / 2.0 + 1e-12
+        assert not math.isnan(r["mse"])
+
+
+def test_encode_is_map_side(vecs):
+    # encode/decode embed bounds as literals: no Exchange in the plan
+    bounds = sq8_fit(vecs, "embedding")
+    plan = (
+        vecs.select(sq8_encode(F.col("embedding"), bounds).alias("c"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange" not in plan
+
+
+def test_fit_validations(spark):
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="no vectors"):
+        sq8_fit(empty, "embedding")
+    ragged = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, [1.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="ragged"):
+        sq8_fit(ragged, "embedding")
+
+
+def test_refit_trigger(spark, vecs):
+    bounds = sq8_fit(vecs, "embedding")
+    baseline = sq8_error_report(vecs, "embedding", bounds).first()["mse"]
+    # the corpus the bounds were fitted on does not trip the trigger
+    assert not sq8_refit_needed(vecs, "embedding", bounds, baseline)
+    # planted drift: values shifted far outside the fitted bounds ->
+    # clipped mass + error growth both fire
+    drifted = vecs.select(
+        "vec_id",
+        F.transform("embedding", lambda v: v * 10.0 + 100.0).alias("embedding"),
+    )
+    assert sq8_refit_needed(drifted, "embedding", bounds, baseline)
+    # clip signal alone: one component nudged past hi on 2 of 4 rows
+    # (>1% mass) while reconstruction error stays small elsewhere
+    nudged = vecs.select(
+        "vec_id",
+        F.transform(
+            "embedding", lambda v: F.when(v > 19.0, v + 5.0).otherwise(v)
+        ).alias("embedding"),
+    )
+    assert sq8_refit_needed(nudged, "embedding", bounds, baseline)
+    # empty probe: nothing to judge, stays quiet
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    assert not sq8_refit_needed(empty, "embedding", bounds, baseline)
 
 
 def test_strip_markup_stages(spark):
@@ -22,3 +147,26 @@ def test_strip_markup_stages(spark):
     assert out[3] == "a <b> \"c\" 'd' e"
     assert out[4] == "no markup here"
     assert out[5] == "t"
+
+
+def test_sq8_baseline_roundtrip(spark, vecs, tmp_path):
+    from rust_cdc_validator_spark.operators.quantize import (
+        read_sq8_baseline,
+        sq8_refit_needed,
+        write_sq8_baseline,
+    )
+
+    bounds = sq8_fit(vecs, "embedding")
+    path = str(tmp_path / "tier")
+    mse = write_sq8_baseline(spark, path, vecs, "embedding", bounds)
+    assert read_sq8_baseline(spark, path) == mse
+    # the persisted baseline drives the same trigger decisions
+    assert not sq8_refit_needed(vecs, "embedding", bounds, read_sq8_baseline(spark, path))
+    drifted = vecs.select(
+        "vec_id",
+        F.transform("embedding", lambda v: v * 10.0 + 100.0).alias("embedding"),
+    )
+    assert sq8_refit_needed(drifted, "embedding", bounds, read_sq8_baseline(spark, path))
+    # missing baseline raises, never silently anchors at 0.0
+    with pytest.raises(Exception):
+        read_sq8_baseline(spark, str(tmp_path / "never_written"))

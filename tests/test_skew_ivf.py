@@ -3,6 +3,52 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from rust_cdc_validator_spark.operators.similarity import brute_force_topk, ivf_topk
+from rust_cdc_validator_spark.operators.skew import salted_agg, salted_join
+
+
+def test_salted_join_equals_plain_join(spark):
+    # skewed big side: 90% of rows share key 1
+    big = spark.range(2000).select(
+        F.when(F.col("id") % 10 != 0, 1).otherwise(F.col("id")).alias("k"),
+        F.col("id").alias("payload"),
+    )
+    small = spark.range(300).select(F.col("id").alias("k"), (F.col("id") * 2).alias("dim"))
+    plain = big.join(small, on=["k"]).select("k", "payload", "dim")
+    salted = salted_join(big, small, on=["k"], salt_factor=4).select("k", "payload", "dim")
+    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
+
+
+def test_salted_join_left(spark):
+    big = spark.range(100).select((F.col("id") % 5).alias("k"), F.col("id").alias("v"))
+    small = spark.range(3).select(F.col("id").alias("k"), F.lit("x").alias("tag"))
+    plain = big.join(small, on=["k"], how="left").select("k", "v", "tag")
+    salted = salted_join(big, small, on=["k"], salt_factor=4, how="left").select("k", "v", "tag")
+    assert sorted(map(tuple, plain.collect()), key=str) == sorted(
+        map(tuple, salted.collect()), key=str
+    )
+
+
+def test_salted_agg_equals_plain_agg(spark):
+    df = spark.range(5000).select(
+        F.when(F.col("id") % 100 != 0, 0).otherwise(F.col("id") % 7).alias("k"),
+        (F.col("id") % 13).alias("v"),
+    )
+    plain = {
+        (r["k"]): (r["n"], r["s"], r["mx"])
+        for r in df.groupBy("k")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"), F.max("v").alias("mx"))
+        .collect()
+    }
+    salted = {
+        (r["k"]): (r["n"], r["s"], r["mx"])
+        for r in salted_agg(
+            df,
+            ["k"],
+            partial_aggs={"n": F.count(F.lit(1)), "s": F.sum("v"), "mx": F.max("v")},
+            final_aggs={"n": F.sum, "s": F.sum, "mx": F.max},
+        ).collect()
+    }
+    assert plain == salted
 
 
 def test_ivf_quantizer_no_extra_job_with_known_rows(spark):
@@ -214,3 +260,28 @@ def test_ivf_cell_stats_and_refit_trigger(spark, tmp_path):
     assert sum(stats.values()) == 520
     assert max(stats.values()) >= 400
     assert ivf_refit_needed(spark, idx, max_imbalance=3.0)
+
+
+def test_key_skew_report_values(spark):
+    from rust_cdc_validator_spark.operators.skew import key_skew_report
+
+    # uniform: 4 keys x 25 rows
+    uni = spark.createDataFrame(
+        [(i, i % 4) for i in range(100)], "id long, k long"
+    )
+    r = key_skew_report(uni, ["k"]).first()
+    assert (r["n_rows"], r["n_keys"], r["max_count"]) == (100, 4, 25)
+    assert r["entropy_norm"] == 1.0 and r["max_share"] == 0.25
+    assert abs(r["gini"]) < 1e-9
+    # one dominant key: 70/100 on key 9
+    hot = spark.createDataFrame(
+        [(i, i % 3) for i in range(30)] + [(100 + i, 9) for i in range(70)],
+        "id long, k long",
+    )
+    h = key_skew_report(hot, ["k"]).first()
+    assert h["max_share"] == 0.7 and h["n_keys"] == 4
+    assert h["entropy_norm"] < 0.7 and h["gini"] > 0.4
+    # single key: defined degenerate values
+    one = spark.createDataFrame([(1, 5), (2, 5)], "id long, k long")
+    o = key_skew_report(one, ["k"]).first()
+    assert (o["n_keys"], o["entropy_norm"], o["gini"]) == (1, 0.0, 0.0)

@@ -1,8 +1,87 @@
-"""Readability and PII detection in functions/text.py."""
+"""URL canonicalization (functions/url.py): rule-by-rule table of tricky
+cases, idempotence, and dirty-input safety."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+from rust_cdc_validator_spark.functions.url import canonicalize_url
+
+CASES = [
+    # fragment
+    ("http://a.com/x#frag", "http://a.com/x"),
+    # scheme/host case; path+query case preserved
+    ("HTTP://WWW.Example.COM/Path?Q=V", "http://example.com/Path?Q=V"),
+    # default ports, with and without path
+    ("http://a.com:80/x", "http://a.com/x"),
+    ("https://a.com:443", "https://a.com"),
+    ("http://a.com:8080/x", "http://a.com:8080/x"),  # non-default kept
+    ("https://a.com:80/x", "https://a.com:80/x"),  # 80 is not https default
+    # www
+    ("https://www.a.com/x", "https://a.com/x"),
+    # tracking params dropped, survivors sorted, '?' dropped when empty
+    ("http://a.com/x?utm_source=s&b=2&a=1", "http://a.com/x?a=1&b=2"),
+    ("http://a.com/x?utm_source=s&fbclid=f", "http://a.com/x"),
+    ("http://a.com/x?ref=r&gclid=g&keep=1", "http://a.com/x?keep=1"),
+    # param-order insensitivity
+    ("http://a.com/x?b=2&a=1", "http://a.com/x?a=1&b=2"),
+    # trailing slash trimmed on non-root, kept on root
+    ("http://a.com/x/", "http://a.com/x"),
+    ("http://a.com/x/?a=1", "http://a.com/x?a=1"),
+    ("http://a.com/", "http://a.com/"),
+    ("http://a.com", "http://a.com"),
+    # everything at once
+    (
+        "HTTPS://WWW.Shop.COM:443/a/b/?utm_campaign=c&z=9&a=1#top",
+        "https://shop.com/a/b?a=1&z=9",
+    ),
+    # dirty inputs pass through (fragment rule still applies)
+    ("not a url", "not a url"),
+    ("", ""),
+]
+
+
+def test_canonicalize_table(spark):
+    df = spark.createDataFrame(
+        [(i, raw) for i, (raw, _) in enumerate(CASES)], "i long, u string"
+    )
+    got = {
+        r["i"]: r["c"]
+        for r in df.select("i", canonicalize_url(F.col("u")).alias("c")).collect()
+    }
+    for i, (raw, want) in enumerate(CASES):
+        assert got[i] == want, f"{raw!r}: {got[i]!r} != {want!r}"
+
+
+def test_canonicalize_idempotent(spark):
+    df = spark.createDataFrame(
+        [(i, raw) for i, (raw, _) in enumerate(CASES)], "i long, u string"
+    )
+    once = df.select("i", canonicalize_url(F.col("u")).alias("c"))
+    twice = once.select(
+        "i", "c", canonicalize_url(F.col("c")).alias("c2")
+    ).collect()
+    for r in twice:
+        assert r["c2"] == r["c"], f"not idempotent: {r['c']!r} -> {r['c2']!r}"
+
+
+def test_keep_www_variant(spark):
+    df = spark.createDataFrame([("http://www.a.com/x",)], "u string")
+    r = df.select(
+        canonicalize_url(F.col("u"), strip_www=False).alias("c")
+    ).first()
+    assert r["c"] == "http://www.a.com/x"
+
+
+def test_canonicalize_is_map_side(spark):
+    df = spark.createDataFrame([("http://a.com/x",)], "u string")
+    plan = (
+        df.select(canonicalize_url(F.col("u")).alias("c"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange" not in plan
 
 
 def test_flesch_components(spark):

@@ -29,12 +29,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The catalog: the 50 queries that CORRECTNESS_r{N}.json checks plus
-    the 42 that the tests run or cite (92 in all).
+    """The whole query catalog of ``queries.py``.
+
+    The driver's CORRECTNESS_r{N}.json checks a fixed subset of it.
     tests/test_oracle_catalog.py runs every oracled query against DuckDB
     at sf0.001 in pytest, ``python tools/check_oracle.py`` runs the same
     comparison at sf0.01, and tests/test_goldens_sketch_ops.py pins the
-    23 rows-only sketch queries."""
+    rows-only sketch queries."""
     return dict(QUERIES)
 
 

@@ -18,8 +18,7 @@ Layout:
     functions/  text analysis, hashing (minhash/simhash), vector math
     plans/      plan-inspection helpers (pushdown / join-strategy assertions)
     streaming/  incremental CDC replay via Structured Streaming
-    queries.py  the query catalog (the 50 checked queries and the ones tests
-                pin) with its DuckDB oracle SQL
+    queries.py  the query catalog with its DuckDB oracle SQL
 """
 
 from rust_cdc_validator_spark.api import CdcValidator  # noqa: F401

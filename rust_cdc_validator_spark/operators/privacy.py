@@ -14,8 +14,8 @@ band) whose joint values isolate individuals. The standard audit:
     share the same diagnosis.
 
 Both are plain aggregations, so the audit is exactly SQL-replayable —
-unlike the PII regex scrub (``events_pii_scrub``), which removes known
-patterns, this measures the structural risk that remains.
+unlike a PII regex scrub, which removes known patterns, this measures the
+structural risk that remains.
 
 Scale shape at 100 TB: ONE hash aggregation on the quasi-identifier
 tuple with map-side partial counts (plus a distinct-count partial for

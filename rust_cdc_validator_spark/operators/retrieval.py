@@ -25,8 +25,8 @@ Scale design (the part that matters at 100 TB):
 Engine portability: with ``log_idf=False`` the scorer uses the monotone
 non-log idf ``(N - df + 0.5) / (df + 0.5)``; every op is then IEEE
 add/mul/div on exactly-representable inputs, so an independent SQL engine
-reproduces the scores bit-for-bit (same trick as lang_distinctive_terms —
-``ln`` may differ in the last ulp across libm implementations). The default
+reproduces the scores bit-for-bit (``ln`` may differ in the last ulp
+across libm implementations). The default
 ``log_idf=True`` is the classic BM25+ formula for production use.
 """
 

@@ -3,7 +3,8 @@
 :345-373). One command, two phases: snapshot (CDC replay) then validate
 (diff), gated by --only-snapshot / --only-datadiff.
 
-The catalog comes from a JSON file (StaticCatalog shape) or a JDBC URL:
+The catalog comes from the JSON file named by --catalog-json
+(StaticCatalog shape):
 
     {"public": {"customers": {"columns": {"id": "bigint", ...},
                               "primary_key": ["id"]}}}

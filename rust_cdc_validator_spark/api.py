@@ -181,7 +181,6 @@ class CdcValidator:
         table: str,
         state_table: str,
         new_state_table: str,
-        n_buckets: int | None = None,
     ) -> DataFrame:
         """Incremental snapshot advance: apply ONLY the CDC files in the
         payload's [start_date, stop_date) window to an existing PK-bucketed
@@ -209,7 +208,6 @@ class CdcValidator:
         """
         from rust_cdc_validator_spark.operators.replay import scan_changes
         from rust_cdc_validator_spark.operators.state import (
-            merge_into_state,
             merge_into_state_touched,
             _bucket_count,
             save_state_bucketed,
@@ -231,11 +229,10 @@ class CdcValidator:
         pk = self.catalog.get_primary_key(payload.schema, table)
         if not pk:
             raise ValueError("advance_state requires a primary key (bucketed state)")
-        current_buckets = _bucket_count(self.spark, state_table)
         if not entries:  # empty window: state unchanged, just version forward
             save_state_bucketed(
                 self.spark.table(state_table), new_state_table, pk,
-                n_buckets=n_buckets or current_buckets,
+                n_buckets=_bucket_count(self.spark, state_table),
             )
         else:
             # same drift gate as snapshot_table: a column added to the CDC
@@ -246,20 +243,12 @@ class CdcValidator:
             # contract)
             columns = self.catalog.get_table_columns(payload.schema, table)
             seqd = scan_changes(self.spark, entries, expected_columns=list(columns))
-            if n_buckets is not None and n_buckets != current_buckets:
-                # re-bucketing: touched-file reuse is impossible (every
-                # bucket's membership changes), so fall back to the full
-                # rewrite
-                merged = merge_into_state(self.spark, state_table, seqd, pk)
-                save_state_bucketed(merged, new_state_table, pk, n_buckets=n_buckets)
-            else:
-                # the merge reads Op for its delete arm and drops the
-                # envelope itself; only the delta's buckets are rewritten —
-                # untouched buckets' files carry over byte-identical
-                # (operators/state.py)
-                merge_into_state_touched(
-                    self.spark, state_table, seqd, pk, new_state_table
-                )
+            # the merge reads Op for its delete arm and drops the envelope
+            # itself; only the delta's buckets are rewritten — untouched
+            # buckets' files carry over byte-identical (operators/state.py)
+            merge_into_state_touched(
+                self.spark, state_table, seqd, pk, new_state_table
+            )
         self._stamp_state_window(new_state_table, payload)
         return self.spark.table(new_state_table)
 
@@ -301,7 +290,6 @@ class CdcValidator:
         payload: CdcPayload,
         state_tables: dict[str, str],
         new_state_tables: dict[str, str],
-        n_buckets: int | None = None,
     ) -> dict[str, DataFrame]:
         """Advance EVERY catalog table's bucketed state over the payload
         window, fanned out on ``_fan_out`` like ``snapshot`` /
@@ -316,7 +304,7 @@ class CdcValidator:
         return _fan_out(
             payload,
             lambda t: self.advance_state(
-                payload, t, state_tables[t], new_state_tables[t], n_buckets
+                payload, t, state_tables[t], new_state_tables[t]
             ),
             tables,
         )

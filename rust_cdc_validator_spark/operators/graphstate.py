@@ -55,6 +55,7 @@ from rust_cdc_validator_spark.operators.graph import (
     _parse_bytes,
     _RANK_ROW_BYTES,
 )
+from rust_cdc_validator_spark.sources.manifest import hadoop_fs
 
 __all__ = [
     "build_edge_state",
@@ -79,6 +80,49 @@ __all__ = [
     "louvain_from_state",
     "modularity_from_state",
 ]
+
+
+def _fs_write_text(spark: SparkSession, uri: str, text: str) -> None:
+    """Write-then-rename so readers never observe a truncated file — the
+    manifest is the version COMMIT record (atomic on local/HDFS; on
+    object stores the rename is copy+delete but the visible object still
+    appears all-or-nothing, which is the property the manifest needs)."""
+    fs, path, jvm = hadoop_fs(spark, uri)
+    tmp = jvm.org.apache.hadoop.fs.Path(uri + ".tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(text, "utf-8"))
+    finally:
+        out.close()
+    if fs.exists(path):
+        fs.delete(path, False)
+    if not fs.rename(tmp, path):
+        raise IOError(f"could not commit {uri} (rename failed)")
+
+
+def _fs_read_text(spark: SparkSession, uri: str) -> str:
+    fs, path, jvm = hadoop_fs(spark, uri)
+    stream = fs.open(path)
+    try:
+        reader = jvm.java.io.BufferedReader(
+            jvm.java.io.InputStreamReader(stream, "UTF-8")
+        )
+        lines = []
+        while True:
+            line = reader.readLine()
+            if line is None:
+                break
+            lines.append(line)
+        return "\n".join(lines)
+    finally:
+        stream.close()
+
+
+def _fs_list_names(spark: SparkSession, uri: str) -> list[str]:
+    fs, path, _ = hadoop_fs(spark, uri)
+    if not fs.exists(path):
+        return []
+    return [s.getPath().getName() for s in fs.listStatus(path)]
 
 
 def _canonical(
@@ -225,14 +269,11 @@ def _write_adj_manifest(
     schema_json: str,
     buckets: int,
 ) -> None:
-    """The adjacency COMMIT record (write-then-rename, like
-    ``state._fs_write_text``): per bucket, the data files that make the
+    """The adjacency COMMIT record (write-then-rename, through
+    :func:`_fs_write_text`): per bucket, the data files that make the
     bucket up — own files for fresh/touched buckets, the parent
-    version's files (verbatim, zero bytes moved) for untouched ones.
-    The same design point as ``state.merge_into_state_manifest``."""
+    version's files (verbatim, zero bytes moved) for untouched ones."""
     import json
-
-    from rust_cdc_validator_spark.operators.state import _fs_write_text
 
     manifest = {
         "n_buckets": buckets,
@@ -276,8 +317,6 @@ def _write_adj_manifest(
     # enc_dict/enc_adj parquet): delete the whole derived/ subtree so a
     # stale encoding can never serve the new graph
     try:
-        from rust_cdc_validator_spark.sources.manifest import hadoop_fs
-
         fs, p, _ = hadoop_fs(spark, f"{path}/derived")
         if fs.exists(p):
             fs.delete(p, True)
@@ -317,9 +356,6 @@ def _load_adj_manifest(spark: SparkSession, path: str) -> dict | None:
     """None for a legacy (pre-manifest, flat ``adj/``) state."""
     import json
 
-    from rust_cdc_validator_spark.operators.state import _fs_read_text
-    from rust_cdc_validator_spark.sources.manifest import hadoop_fs
-
     if path in _ADJ_MANIFEST_CACHE:
         return _ADJ_MANIFEST_CACHE[path]
     uri = _adj_manifest_path(path)
@@ -337,8 +373,6 @@ def _own_adj_files(spark: SparkSession, path: str) -> dict[int, list[str]]:
     """Freshly written adj files under ``{path}/adj``, grouped by bucket
     id, as paths relative to the state dir."""
     import re
-
-    from rust_cdc_validator_spark.operators.state import _fs_list_names
 
     out: dict[int, list[str]] = {}
     for sub in _fs_list_names(spark, f"{path}/adj"):
@@ -465,8 +499,7 @@ def advance_edge_state(
 
     Scale shape (r12, bucket-selective): only DELTA-TOUCHED buckets are
     read, merged, and rewritten — untouched buckets carry over as FILE
-    REFERENCES in the new version's adj manifest (the
-    ``state.merge_into_state_manifest`` discipline: zero bytes moved or
+    REFERENCES in the new version's adj manifest (zero bytes moved or
     duplicated on any store, byte-identical files shared across
     versions). Because the adjacency is bucketed by ``src`` and a src's
     transition probabilities derive only from its own bucket's rows,
@@ -627,8 +660,6 @@ def _derived_ready(spark: SparkSession, uri: str) -> bool:
     """True iff a derived parquet relation was COMMITTED at ``uri``
     (Spark's _SUCCESS marker — a killed writer leaves no marker, so a
     partial directory is recomputed, never read)."""
-    from rust_cdc_validator_spark.sources.manifest import hadoop_fs
-
     try:
         fs, p, _ = hadoop_fs(spark, f"{uri}/_SUCCESS")
         return bool(fs.exists(p))
@@ -658,8 +689,6 @@ def _read_derived_frames(
     commit record; each level additionally needs its _SUCCESS marker."""
     import json
 
-    from rust_cdc_validator_spark.operators.state import _fs_read_text
-
     try:
         meta = json.loads(_fs_read_text(spark, f"{base_uri}/meta.json"))
     except Exception:
@@ -686,8 +715,6 @@ def _write_derived_frames(
     pure function of the immutable state version, so an extension pass
     only writes the new depths. meta.json commits last."""
     import json
-
-    from rust_cdc_validator_spark.operators.state import _fs_write_text
 
     try:
         out = []

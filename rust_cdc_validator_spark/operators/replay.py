@@ -44,6 +44,9 @@ from rust_cdc_validator_spark.sources.manifest import ManifestEntry, build_manif
 # (file_rank, row_index) packable into one orderable int64.
 _SEQ_FILE_STRIDE = 1 << 40
 
+# The total replay order column ``with_sequence`` attaches.
+SEQ_COL = "_seq"
+
 
 def _norm_path(col: F.Column) -> F.Column:
     """Canonicalize a file path for manifest↔scan matching: the scan's
@@ -53,40 +56,23 @@ def _norm_path(col: F.Column) -> F.Column:
     return F.regexp_replace(col, r"^[a-zA-Z0-9+.\-]+:/{1,3}", "/")
 
 
-def with_sequence(
-    df: DataFrame, manifest_df: DataFrame, has_row_index: bool = True
-) -> DataFrame:
-    """Attach the total replay order ``_seq`` to a raw multi-file scan.
+def with_sequence(df: DataFrame, manifest_df: DataFrame) -> DataFrame:
+    """Attach the total replay order ``_seq`` to a raw multi-file parquet
+    scan. Within-file order comes free from the parquet reader's
+    ``_metadata.row_index``.
 
     The manifest join is explicitly broadcast: it has one row per file and
     must never shuffle the fact side.
-
-    ``has_row_index=True`` (parquet): within-file order comes free from
-    ``_metadata.row_index``. ``False`` (csv — its file source exposes no
-    row_index): derive it as row_number per file ordered by
-    (``_metadata.file_block_start``, ``monotonically_increasing_id``).
-    The byte offset is the contractual part: Spark's file source bin-packs
-    splits ordered by SIZE, not offset, so mono-id alone preserving offset
-    order across a multi-split file is incidental (a stable sort of
-    equal-size splits), not guaranteed. Block start orders the splits by
-    file position; mono id orders rows within one split (the low-bit
-    counter follows read order inside a task). Costs one shuffle on file
-    path.
     """
-    tagged = df.withColumn("_path", _norm_path(F.col("_metadata.file_path")))
-    if has_row_index:
-        tagged = tagged.withColumn("_row_idx", F.col("_metadata.row_index"))
-    else:
-        w = Window.partitionBy("_path").orderBy(
-            F.col("_metadata.file_block_start"), F.monotonically_increasing_id()
-        )
-        tagged = tagged.withColumn("_row_idx", F.row_number().over(w) - F.lit(1))
+    tagged = df.withColumn(
+        "_path", _norm_path(F.col("_metadata.file_path"))
+    ).withColumn("_row_idx", F.col("_metadata.row_index"))
     manifest_keyed = manifest_df.select(
         _norm_path(F.col("path")).alias("_path"), "is_load", "file_seq"
     )
     joined = tagged.join(F.broadcast(manifest_keyed), on="_path", how="inner")
     return joined.withColumn(
-        "_seq",
+        SEQ_COL,
         F.col("file_seq") * F.lit(_SEQ_FILE_STRIDE) + F.col("_row_idx"),
     ).drop("_path", "_row_idx", "file_seq", "is_load")
 
@@ -94,50 +80,43 @@ def with_sequence(
 def net_effect(
     changes: DataFrame,
     primary_key: list[str],
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
     drop_envelope: bool = True,
 ) -> DataFrame:
     """Reduce an ordered change log to final table state.
 
-    ``changes`` carries data columns + ``op_col`` ('I'/'U'/'D'; null ⇒ 'I',
-    the LOAD-file case) + ``seq_col`` (total order). Result: one row per live
+    ``changes`` carries data columns + ``Op`` ('I'/'U'/'D'; null ⇒ 'I',
+    the LOAD-file case) + ``_seq`` (total order). Result: one row per live
     primary key — identical to sequentially applying every change in
-    ``seq_col`` order (insert/upsert/delete), the reference's fixpoint.
+    ``_seq`` order (insert/upsert/delete), the reference's fixpoint.
 
     Op matching is exact equality; the reference's substring ``contains('D')``
     (postgres_operator_impl.rs:302-315,345) is a looseness, not a semantic
     (SURVEY.md §2.2 P3).
     """
-    op = F.coalesce(F.col(op_col), F.lit("I"))
+    op = F.coalesce(F.col(OP_COL), F.lit("I"))
     if not primary_key:
         # No PK → append-only replay: deletes/updates have no key to address.
-        out = changes.filter(op != F.lit("D")).drop(seq_col)
+        out = changes.filter(op != F.lit("D")).drop(SEQ_COL)
         return out.drop(*ENVELOPE_COLS) if drop_envelope else out
 
-    w = Window.partitionBy(*primary_key).orderBy(F.col(seq_col).desc())
+    w = Window.partitionBy(*primary_key).orderBy(F.col(SEQ_COL).desc())
     last = (
         changes.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", seq_col)
+        .drop("_rn", SEQ_COL)
     )
-    final = last.filter(F.coalesce(F.col(op_col), F.lit("I")) != F.lit("D"))
+    final = last.filter(F.coalesce(F.col(OP_COL), F.lit("I")) != F.lit("D"))
     return final.drop(*ENVELOPE_COLS) if drop_envelope else final
 
 
-def net_effect_partial(
-    changes: DataFrame,
-    primary_key: list[str],
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
-) -> DataFrame:
+def net_effect_partial(changes: DataFrame, primary_key: list[str]) -> DataFrame:
     """Net effect over PARTIAL-image updates, in ONE hash aggregation.
 
     The reference replays FULL row images (every DMS record carries the
     whole row, postgres_operator_impl.rs:193-260), so last-row-wins is
     enough. DMS/Debezium can also emit partial images — an update carries
     only the changed columns, NULL meaning "unchanged". Final state is then
-    per key, per COLUMN: the last non-null value in ``seq_col`` order, with
+    per key, per COLUMN: the last non-null value in ``_seq`` order, with
     delete fencing — a 'D' tombstone kills the key unless a later I/U
     revives it, and revival must not resurrect pre-delete column values.
 
@@ -156,18 +135,18 @@ def net_effect_partial(
     (map-side) combine — pinned in tests/test_plans.py — so at 100 TB the
     single shuffle carries one reduced row per (task, hot key), not the
     whole change log; unlike ``net_effect``'s last-row-wins, it is correct
-    when updates carry column subsets. Ties cannot occur: ``seq_col`` is
+    when updates carry column subsets. Ties cannot occur: ``_seq`` is
     unique by construction (with_sequence packs file rank + row index).
     """
     if not primary_key:
         raise ValueError("partial-image net effect requires a primary key")
-    op = F.coalesce(F.col(op_col), F.lit("I"))
+    op = F.coalesce(F.col(OP_COL), F.lit("I"))
     is_del = op == F.lit("D")
-    seq = F.col(seq_col)
+    seq = F.col(SEQ_COL)
     value_cols = [
         c
         for c in changes.columns
-        if c not in primary_key and c != op_col and c != seq_col
+        if c not in primary_key and c != OP_COL and c != SEQ_COL
     ]
     aggs = [
         F.max(F.when(is_del, seq)).alias("_d"),
@@ -211,32 +190,18 @@ def scan_changes(
     spark,
     entries: list[ManifestEntry],
     expected_columns: list[str] | None = None,
-    file_format: str = "parquet",
-    schema=None,
 ) -> DataFrame:
-    """The sequenced change log of ``entries``: every file in ONE
-    distributed scan, the schema-drift containment check against
-    ``expected_columns`` (cdc_operator.rs:170-184), envelope columns
-    present on every row, and the total replay order ``_seq`` from the
-    broadcast manifest join (:func:`with_sequence`).
-
-    ``file_format``: 'parquet' (the reference's only format) or 'csv' —
-    DMS's *default* output format, headerless with the envelope columns
-    first; CSV requires an explicit ``schema`` (ordered like the files).
-    ``_metadata.row_index`` exists only for the parquet source; CSV order
-    is derived from (file_block_start, monotonic id) in ``with_sequence``.
+    """The sequenced change log of ``entries``: every parquet file (the
+    reference's only format) in ONE distributed scan, the schema-drift
+    containment check against ``expected_columns``
+    (cdc_operator.rs:170-184), envelope columns present on every row, and
+    the total replay order ``_seq`` from the broadcast manifest join
+    (:func:`with_sequence`).
     """
     if not entries:
         raise ValueError("empty manifest: no files to replay")
     paths = [e.path for e in entries]
-    if file_format == "parquet":
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    elif file_format == "csv":
-        if schema is None:
-            raise ValueError("csv replay requires an explicit schema")
-        df = spark.read.schema(schema).option("header", "false").csv(paths)
-    else:
-        raise ValueError(f"unsupported file_format: {file_format!r}")
+    df = spark.read.option("mergeSchema", "true").parquet(*paths)
 
     if expected_columns is not None:
         check_schema_containment(df.columns, expected_columns)
@@ -247,7 +212,7 @@ def scan_changes(
             df = df.withColumn(c, F.lit(None).cast("string"))
 
     manifest_df = build_manifest(spark, entries)
-    return with_sequence(df, manifest_df, has_row_index=(file_format == "parquet"))
+    return with_sequence(df, manifest_df)
 
 
 def replay_snapshot(
@@ -255,8 +220,6 @@ def replay_snapshot(
     entries: list[ManifestEntry],
     primary_key: list[str],
     expected_columns: list[str] | None = None,
-    file_format: str = "parquet",
-    schema=None,
 ) -> DataFrame:
     """End-to-end snapshot of one table: manifest → scan → net effect.
 
@@ -266,32 +229,12 @@ def replay_snapshot(
     state by :func:`net_effect`.
     """
     return net_effect(
-        scan_changes(spark, entries, expected_columns, file_format, schema),
+        scan_changes(spark, entries, expected_columns),
         primary_key,
     )
 
 
-def apply_changes_sql(
-    changes: DataFrame, primary_key: list[str], seq_col: str = "_seq"
-) -> str:
-    """The equivalent ANSI SQL for ``net_effect`` (used by oracle checks)."""
-    pk = ", ".join(primary_key)
-    cols = [c for c in changes.columns if c not in (seq_col, *ENVELOPE_COLS)]
-    sel = ", ".join(cols)
-    return f"""
-        SELECT {sel} FROM (
-            SELECT *, row_number() OVER (PARTITION BY {pk} ORDER BY {seq_col} DESC) AS _rn
-            FROM __changes__
-        ) t WHERE _rn = 1 AND coalesce({OP_COL}, 'I') <> 'D'
-    """
-
-
-def scd2_history(
-    changes: DataFrame,
-    primary_key: list[str],
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
-) -> DataFrame:
+def scd2_history(changes: DataFrame, primary_key: list[str]) -> DataFrame:
     """Type-2 slowly-changing-dimension history from the same ordered
     change log :func:`net_effect` collapses — the history-PRESERVING
     sibling (Kimball & Ross, The Data Warehouse Toolkit ch. 5): one row
@@ -301,7 +244,7 @@ def scd2_history(
     (``valid_to`` = that change's sequence, half-open interval); a D
     closes the chain without opening a version. Appended columns:
 
-    * ``valid_from`` — the opening change's ``seq_col`` value;
+    * ``valid_from`` — the opening change's ``_seq`` value;
     * ``valid_to`` — the next change's, NULL while open;
     * ``is_current`` — this version is the key's live row (true on the
       last change iff it isn't a delete).
@@ -309,7 +252,7 @@ def scd2_history(
     The log's envelope columns are the caller's to drop — a dimension
     build usually keeps them for lineage.
 
-    Spark shape: ONE window pass per key ordered by ``seq_col`` —
+    Spark shape: ONE window pass per key ordered by ``_seq`` —
     ``lead(seq)`` closes intervals, ``row_number`` from the top marks
     currency — then deletes drop (their closing effect already
     captured by the lead). Same partitioning and sort as
@@ -324,14 +267,14 @@ def scd2_history(
     """
     if not primary_key:
         raise ValueError("scd2_history requires a primary key")
-    op = F.coalesce(F.col(op_col), F.lit("I"))
-    w = Window.partitionBy(*primary_key).orderBy(F.col(seq_col).asc())
-    wd = Window.partitionBy(*primary_key).orderBy(F.col(seq_col).desc())
+    op = F.coalesce(F.col(OP_COL), F.lit("I"))
+    w = Window.partitionBy(*primary_key).orderBy(F.col(SEQ_COL).asc())
+    wd = Window.partitionBy(*primary_key).orderBy(F.col(SEQ_COL).desc())
     return (
-        changes.withColumn("_next_seq", F.lead(seq_col).over(w))
+        changes.withColumn("_next_seq", F.lead(SEQ_COL).over(w))
         .withColumn("_rev", F.row_number().over(wd))
         .filter(op != F.lit("D"))
-        .withColumn("valid_from", F.col(seq_col))
+        .withColumn("valid_from", F.col(SEQ_COL))
         .withColumn("valid_to", F.col("_next_seq"))
         .withColumn("is_current", F.col("_rev") == 1)
         .drop("_next_seq", "_rev")

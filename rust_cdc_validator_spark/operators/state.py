@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import posixpath
 import re
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,7 +48,7 @@ from pyspark.sql.window import Window
 
 from rust_cdc_validator_spark.sources.manifest import hadoop_fs
 
-from .replay import ENVELOPE_COLS, OP_COL
+from .replay import ENVELOPE_COLS, OP_COL, SEQ_COL
 
 # Spark names bucketed files `part-<task>-<uuid>_<bucket:05d>.c000.<codec>...`
 # (BucketingUtils.bucketIdToString); the suffix is how the bucketed scan
@@ -62,28 +61,24 @@ def save_state_bucketed(
     table: str,
     primary_key: list[str],
     n_buckets: int = 64,
-    path: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist table state hash-bucketed + sorted on the PK.
+    """Persist table state hash-bucketed + sorted on the PK, as a managed
+    table in the session warehouse (overwriting any table of that name).
 
     ``n_buckets`` sizes the merge parallelism: each bucket is one task in
     every downstream co-located join, so pick ≈ 2-4× cluster cores at the
     expected state size (64 is the small-fixture floor, NOT a 100 TB
-    setting). ``path`` makes it an external table (object-store layout);
-    default is the session warehouse.
+    setting).
     """
     if not primary_key:
         raise ValueError("bucketed state requires a primary key")
-    writer = (
+    (
         df.write.format("parquet")
-        .mode(mode)
+        .mode("overwrite")
         .bucketBy(n_buckets, *primary_key)
         .sortBy(*primary_key)
+        .saveAsTable(table)
     )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
 
 
 def _describe(spark: SparkSession, table: str, key: str, missing: str) -> str:
@@ -105,22 +100,17 @@ def _table_location(spark: SparkSession, table: str) -> str:
     return _describe(spark, table, "Location", "has no location")
 
 
-def last_change_per_key(
-    changes: DataFrame,
-    primary_key: list[str],
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
-) -> DataFrame:
+def last_change_per_key(changes: DataFrame, primary_key: list[str]) -> DataFrame:
     """Reduce a sequenced change log to its LAST change per key, keeping the
     op code (unlike ``net_effect``, which resolves deletes away — a merge
     needs to see them to remove state rows). Output: data columns + ``_op``.
     """
-    w = Window.partitionBy(*primary_key).orderBy(F.col(seq_col).desc())
+    w = Window.partitionBy(*primary_key).orderBy(F.col(SEQ_COL).desc())
     last = (
         changes.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .withColumn("_op", F.coalesce(F.col(op_col), F.lit("I")))
-        .drop("_rn", seq_col, *ENVELOPE_COLS)
+        .withColumn("_op", F.coalesce(F.col(OP_COL), F.lit("I")))
+        .drop("_rn", SEQ_COL, *ENVELOPE_COLS)
     )
     return last
 
@@ -130,8 +120,6 @@ def merge_into_state(
     state_table: str,
     changes: DataFrame,
     primary_key: list[str],
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
 ) -> DataFrame:
     """Apply a sequenced CDC delta to bucketed state; return the new state.
 
@@ -154,7 +142,7 @@ def merge_into_state(
     state = spark.table(state_table)
     n_buckets = _bucket_count(spark, state_table)
     changes = changes.repartition(n_buckets, *primary_key)
-    delta = last_change_per_key(changes, primary_key, op_col, seq_col)
+    delta = last_change_per_key(changes, primary_key)
     return _merge_frames(state, delta, primary_key)
 
 
@@ -206,51 +194,12 @@ def _bucket_files(spark: SparkSession, location: str) -> dict[int, list[str]]:
     return out
 
 
-@contextmanager
-def _touched_delta(
-    changes: DataFrame,
-    primary_key: list[str],
-    n_buckets: int,
-    op_col: str,
-    seq_col: str,
-):
-    """The delta of a touched-bucket merge: ``changes`` reduced to its last
-    change per key on a ``n_buckets``-wide PK exchange, persisted for the
-    duration of the block, with the sorted bucket ids it touches —
-    collected through :func:`bucket_id`, the same ``pmod(hash(pk), n)`` the
-    bucketed write uses, so "touched" is exact (bounded by ``n_buckets``
-    ints)."""
-    changes = changes.repartition(n_buckets, *primary_key)
-    delta = last_change_per_key(changes, primary_key, op_col, seq_col).persist()
-    try:
-        touched = sorted(
-            r[0]
-            for r in delta.select(
-                bucket_id(primary_key, n_buckets).alias("_b")
-            ).distinct().collect()
-        )
-        yield delta, touched
-    finally:
-        delta.unpersist()
-
-
-def _read_files(spark: SparkSession, schema, paths: list[str]) -> DataFrame:
-    """Plain parquet scan of exactly ``paths`` (an empty frame of
-    ``schema`` when there are none)."""
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
-
-
 def merge_into_state_touched(
     spark: SparkSession,
     state_table: str,
     changes: DataFrame,
     primary_key: list[str],
     new_state_table: str,
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
-    path: str | None = None,
 ) -> DataFrame:
     """Apply a sequenced CDC delta to bucketed state, writing ONLY the
     buckets the delta touches; untouched buckets' files carry over
@@ -265,8 +214,11 @@ def merge_into_state_touched(
     dynamic-partition overwrite (``streaming/incremental.py:94-126``).
 
     Mechanics:
-    * the delta and its touched bucket ids come from
-      :func:`_touched_delta`.
+    * the delta is ``changes`` reduced to its last change per key on a
+      ``n_buckets``-wide PK exchange, persisted for the merge. Its touched
+      bucket ids are collected through :func:`bucket_id`, the same
+      ``pmod(hash(pk), n)`` the bucketed write uses, so "touched" is exact
+      (bounded by ``n_buckets`` ints).
     * the state READ is one of two plans, because file pruning and
       exchange-freedom are mutually exclusive on a bucketed table Spark
       can't bucket-prune by a hash predicate. The choice is fixed: pruned
@@ -293,23 +245,36 @@ def merge_into_state_touched(
     n_buckets = _bucket_count(spark, state_table)
     old_loc = _table_location(spark, state_table)
     old_files = _bucket_files(spark, old_loc)
-    with _touched_delta(
-        changes, primary_key, n_buckets, op_col, seq_col
-    ) as (delta, touched):
+    changes = changes.repartition(n_buckets, *primary_key)
+    delta = last_change_per_key(changes, primary_key).persist()
+    try:
+        touched = sorted(
+            r[0]
+            for r in delta.select(
+                bucket_id(primary_key, n_buckets).alias("_b")
+            ).distinct().collect()
+        )
         state = spark.table(state_table)
         if 4 * len(touched) <= n_buckets:
-            state_touched = _read_files(spark, state.schema, [
+            paths = [
                 posixpath.join(old_loc, name)
                 for b in touched
                 for name in old_files.get(b, [])
-            ])
+            ]
+            state_touched = (
+                spark.read.schema(state.schema).parquet(*paths)
+                if paths
+                else spark.createDataFrame([], state.schema)
+            )
         else:
             state_touched = state.filter(
                 bucket_id(primary_key, n_buckets).isin(touched)
             )
         merged = _merge_frames(state_touched, delta, primary_key)
         save_state_bucketed(merged, new_state_table, primary_key,
-                            n_buckets=n_buckets, path=path)
+                            n_buckets=n_buckets)
+    finally:
+        delta.unpersist()
 
     # carry untouched buckets' files from the old version into the new one
     touched_set = set(touched)
@@ -371,348 +336,3 @@ def _carry_files(
             dst_fs, hpath(posixpath.join(new_loc, name)),
             False, dst_fs.getConf(),
         )
-
-
-# ---------------------------------------------------------------------------
-# Version-manifest state (r7): zero-copy carryover on ANY store
-# ---------------------------------------------------------------------------
-#
-# The directory-per-version layout above materializes every version as a
-# full directory: untouched buckets hard-link locally but must be COPIED on
-# object stores — the one remaining non-delta-sized cost in the state chain.
-# The manifest layer removes it: each version is a small JSON file listing,
-# per bucket, the data files that make up that bucket — new files for
-# touched buckets, the PREVIOUS versions' files (verbatim paths) for
-# untouched ones. No file is ever moved or duplicated on any store; a merge
-# writes touched-bucket data plus one manifest. This is the same design
-# point table formats (Iceberg/Delta) occupy, reduced to exactly what
-# bucketed CDC state needs.
-#
-# Layout under a root directory:
-#   {root}/v{version:06d}/data/_mb={bucket}/part-*.parquet   (touched only)
-#   {root}/v{version:06d}/manifest.json
-#
-# Data files are written with `repartition(n_buckets, *pk)` — Spark's
-# HashPartitioning pmod(hash(pk), n) is exactly :func:`bucket_id`, so each
-# write task holds one bucket's rows and `partitionBy("_mb")` yields one
-# file per touched bucket, sorted within by the PK. Reads assemble a plain
-# parquet scan from the manifest's file list; the merge join therefore
-# shuffles the TOUCHED fraction of the state (the pruned-files read
-# above) — at steady state (small deltas) that is the cheaper side of the
-# pruning/exchange-freedom trade anyway, and it is store-agnostic.
-
-
-def _fs_write_text(spark: SparkSession, uri: str, text: str) -> None:
-    """Write-then-rename so readers never observe a truncated file — the
-    manifest is the version COMMIT record (atomic on local/HDFS; on
-    object stores the rename is copy+delete but the visible object still
-    appears all-or-nothing, which is the property the manifest needs)."""
-    fs, path, jvm = hadoop_fs(spark, uri)
-    tmp = jvm.org.apache.hadoop.fs.Path(uri + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(text, "utf-8"))
-    finally:
-        out.close()
-    if fs.exists(path):
-        fs.delete(path, False)
-    if not fs.rename(tmp, path):
-        raise IOError(f"could not commit {uri} (rename failed)")
-
-
-def _fs_read_text(spark: SparkSession, uri: str) -> str:
-    fs, path, jvm = hadoop_fs(spark, uri)
-    stream = fs.open(path)
-    try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        lines = []
-        while True:
-            line = reader.readLine()
-            if line is None:
-                break
-            lines.append(line)
-        return "\n".join(lines)
-    finally:
-        stream.close()
-
-
-def _fs_list_names(spark: SparkSession, uri: str) -> list[str]:
-    fs, path, _ = hadoop_fs(spark, uri)
-    if not fs.exists(path):
-        return []
-    return [s.getPath().getName() for s in fs.listStatus(path)]
-
-
-def _manifest_path(root: str, version: int) -> str:
-    return posixpath.join(root, f"v{version:06d}", "manifest.json")
-
-
-def _committed_versions(spark: SparkSession, root: str) -> list[int]:
-    """Sorted COMMITTED versions under ``root``. The manifest file is the
-    commit record: a merge that died between its data write and its
-    manifest write leaves a data-only ``v{n}/`` dir, which must stay
-    invisible — counting it would permanently wedge every subsequent read
-    and merge on a manifest that never landed, and the retry of the failed
-    merge overwrites the orphan data dir anyway."""
-    fs, _, jvm = hadoop_fs(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    return sorted(
-        v
-        for name in _fs_list_names(spark, root)
-        if re.fullmatch(r"v\d{6}", name)
-        and fs.exists(hpath(_manifest_path(root, (v := int(name[1:])))))
-    )
-
-
-def latest_state_version(spark: SparkSession, root: str) -> int | None:
-    """Highest committed version under ``root`` (None if empty)."""
-    versions = _committed_versions(spark, root)
-    return versions[-1] if versions else None
-
-
-def _load_manifest(spark: SparkSession, root: str, version: int) -> dict:
-    import json
-
-    m = json.loads(_fs_read_text(spark, _manifest_path(root, version)))
-    # JSON keys are strings; bucket ids are ints
-    m["buckets"] = {int(k): v for k, v in m["buckets"].items()}
-    return m
-
-
-def _write_bucket_data(
-    df: DataFrame,
-    root: str,
-    version: int,
-    primary_key: list[str],
-    n_buckets: int,
-) -> str:
-    """Write ``df`` under the version's data dir, one file per bucket
-    (relative paths returned by :func:`_version_bucket_files`)."""
-    data_dir = posixpath.join(root, f"v{version:06d}", "data")
-    (
-        df.withColumn("_mb", bucket_id(primary_key, n_buckets).cast("int"))
-        .repartition(n_buckets, *primary_key)
-        .sortWithinPartitions(*primary_key)
-        .write.partitionBy("_mb")
-        .mode("overwrite")
-        .parquet(data_dir)
-    )
-    return data_dir
-
-
-def _version_bucket_files(
-    spark: SparkSession, root: str, version: int
-) -> dict[int, list[str]]:
-    """Freshly written files of a version, grouped by bucket id, as paths
-    RELATIVE to root (portable if the root is relocated)."""
-    data_rel = f"v{version:06d}/data"
-    out: dict[int, list[str]] = {}
-    for sub in _fs_list_names(spark, posixpath.join(root, data_rel)):
-        m = re.fullmatch(r"_mb=(\d+)", sub)
-        if not m:
-            continue
-        b = int(m.group(1))
-        out[b] = [
-            posixpath.join(data_rel, sub, name)
-            for name in _fs_list_names(spark, posixpath.join(root, data_rel, sub))
-            if name.startswith("part-")
-        ]
-    return out
-
-
-def init_state_manifest(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    primary_key: list[str],
-    n_buckets: int = 64,
-) -> int:
-    """Write ``df`` as version 0 of a manifest-layered bucketed state under
-    ``root``; returns the version number (0)."""
-    import json
-
-    if not primary_key:
-        raise ValueError("bucketed state requires a primary key")
-    data_cols = [c for c in df.columns]
-    _write_bucket_data(df, root, 0, primary_key, n_buckets)
-    files = _version_bucket_files(spark, root, 0)
-    manifest = {
-        "version": 0,
-        "n_buckets": n_buckets,
-        "primary_key": primary_key,
-        "columns": data_cols,
-        "schema": df.schema.json(),
-        "buckets": {str(b): names for b, names in sorted(files.items())},
-    }
-    _fs_write_text(spark, _manifest_path(root, 0), json.dumps(manifest, indent=1))
-    return 0
-
-
-def read_state_manifest(
-    spark: SparkSession, root: str, version: int | None = None
-) -> DataFrame:
-    """Assemble a version's state DataFrame from its manifest file list
-    (latest version by default). Plain parquet scan over exactly the files
-    the manifest names — no directory listing of data dirs, no dependence
-    on which version's directory a file physically lives in."""
-    from pyspark.sql.types import StructType
-
-    if version is None:
-        version = latest_state_version(spark, root)
-        if version is None:
-            raise ValueError(f"no state versions under {root!r}")
-    m = _load_manifest(spark, root, version)
-    schema = StructType.fromJson(__import__("json").loads(m["schema"]))
-    return _read_files(spark, schema, [
-        posixpath.join(root, rel)
-        for b in sorted(m["buckets"])
-        for rel in m["buckets"][b]
-    ])
-
-
-def merge_into_state_manifest(
-    spark: SparkSession,
-    root: str,
-    changes: DataFrame,
-    op_col: str = OP_COL,
-    seq_col: str = "_seq",
-) -> int:
-    """Apply a sequenced CDC delta to manifest-layered state; writes the
-    touched buckets' data files plus one manifest, and returns the new
-    version number. Untouched buckets carry over as PATHS in the manifest
-    — zero bytes moved or duplicated on any store (the manifest-layer
-    answer to ``_carry_files``'s object-store copy fallback).
-
-    Reads only the touched buckets' files (delta-sized read); the merge
-    join shuffles that touched fraction (see module note — the
-    store-agnostic trade). Deletes drop rows; a fully-deleted bucket's
-    manifest entry becomes an empty list. PK and bucket count come from
-    the manifest, so merges chain with no caller-carried state.
-    """
-    import json
-
-    version = latest_state_version(spark, root)
-    if version is None:
-        raise ValueError(f"no state versions under {root!r} — init first")
-    m = _load_manifest(spark, root, version)
-    primary_key = list(m["primary_key"])
-    n_buckets = int(m["n_buckets"])
-    new_version = version + 1
-
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    with _touched_delta(
-        changes, primary_key, n_buckets, op_col, seq_col
-    ) as (delta, touched):
-        state_touched = _read_files(spark, schema, [
-            posixpath.join(root, rel)
-            for b in touched
-            for rel in m["buckets"].get(b, [])
-        ])
-        merged = _merge_frames(state_touched, delta, primary_key)
-        _write_bucket_data(merged, root, new_version, primary_key, n_buckets)
-
-    touched_set = set(touched)
-    new_files = _version_bucket_files(spark, root, new_version)
-    buckets: dict[int, list[str]] = {}
-    for b in range(n_buckets):
-        if b in touched_set:
-            buckets[b] = new_files.get(b, [])  # empty = fully deleted
-        elif b in m["buckets"]:
-            buckets[b] = m["buckets"][b]  # carried verbatim: zero copy
-    manifest = {
-        "version": new_version,
-        "n_buckets": n_buckets,
-        "primary_key": primary_key,
-        "columns": m["columns"],
-        "schema": m["schema"],
-        "buckets": {str(b): names for b, names in sorted(buckets.items())},
-    }
-    _fs_write_text(
-        spark, _manifest_path(root, new_version), json.dumps(manifest, indent=1)
-    )
-    return new_version
-
-
-def gc_state_versions(
-    spark: SparkSession,
-    root: str,
-    keep_versions: int = 2,
-    dry_run: bool = False,
-) -> dict:
-    """Garbage-collect manifest-state versions, respecting shared files.
-
-    The manifest layer makes versions share data files (an untouched
-    bucket's file is referenced by every subsequent manifest until the
-    bucket is next touched), so deleting an old version's DIRECTORY would
-    corrupt newer versions — the exact failure the directory-per-version
-    layout's hard links avoid locally. GC therefore works by
-    REACHABILITY, the same discipline as table-format snapshot expiry:
-
-    * keep the newest ``keep_versions`` manifests;
-    * a data file is LIVE iff some kept manifest references it;
-    * dropped versions lose their ``manifest.json`` and any of their data
-      files that are not live; version directories that still hold live
-      files survive (newer manifests point into them).
-
-    Returns ``{"kept_versions", "dropped_versions", "deleted_files",
-    "retained_shared_files"}``; with ``dry_run`` nothing is deleted and
-    the dict reports what would happen. Driver-side work is bounded by
-    versions × buckets file-list entries (the manifests themselves).
-    """
-    if keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1 — GC never deletes HEAD")
-    # committed versions only (manifest present): an orphan data-only dir
-    # from a merge that died pre-commit is invisible here, exactly as it
-    # is to latest_state_version — the retrying merge overwrites it
-    versions = _committed_versions(spark, root)
-    if not versions:
-        return {
-            "kept_versions": [],
-            "dropped_versions": [],
-            "deleted_files": [],
-            "retained_shared_files": [],
-        }
-    kept = versions[-keep_versions:]
-    dropped = [v for v in versions if v not in kept]
-    live: set[str] = set()
-    for v in kept:
-        m = _load_manifest(spark, root, v)
-        for rels in m["buckets"].values():
-            live.update(rels)
-
-    deleted: list[str] = []
-    retained: list[str] = []
-    fs, _, jvm = hadoop_fs(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    for v in dropped:
-        own = _version_bucket_files(spark, root, v)
-        for rels in own.values():
-            for rel in rels:
-                if rel in live:
-                    retained.append(rel)
-                    continue
-                deleted.append(rel)
-                if not dry_run:
-                    fs.delete(hpath(posixpath.join(root, rel)), False)
-        if not dry_run:
-            fs.delete(hpath(_manifest_path(root, v)), False)
-            # prune now-empty bucket dirs / the version dir if fully dead
-            data_dir = posixpath.join(root, f"v{v:06d}", "data")
-            for sub in _fs_list_names(spark, data_dir):
-                sub_path = posixpath.join(data_dir, sub)
-                if not any(
-                    n.startswith("part-") for n in _fs_list_names(spark, sub_path)
-                ):
-                    fs.delete(hpath(sub_path), True)
-            if not _fs_list_names(spark, data_dir):
-                fs.delete(hpath(posixpath.join(root, f"v{v:06d}")), True)
-    return {
-        "kept_versions": kept,
-        "dropped_versions": dropped,
-        "deleted_files": sorted(deleted),
-        "retained_shared_files": sorted(retained),
-    }

@@ -11,27 +11,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
-
-def base_conf(
-    shuffle_partitions: int,
-    rocksdb_state: bool = False,
-) -> dict[str, str]:
-    """The engine's config block, as data (testable without a JVM).
-
-    ``rocksdb_state=True`` switches streaming state to the RocksDB provider
-    (ships with Spark): the default HDFS-backed store keeps every key in
-    executor heap, which caps stateful streaming (sessionize, dedup maps)
-    at heap size; RocksDB spills to local disk and is the provider any
-    large stateful job runs in production. Off by default locally — tiny
-    test state gains nothing from the extra native layer. NOTE: static
-    conf — must be set before the SparkSession exists; getOrCreate will
-    not apply it to an already-running session.
-    """
-    conf = {
+def base_conf(shuffle_partitions: int) -> dict[str, str]:
+    """The engine's config block, as data (testable without a JVM)."""
+    return {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -44,16 +27,12 @@ def base_conf(
         # 128 MB splits: the parquet-scan granularity we want at 100 TB too.
         "spark.sql.files.maxPartitionBytes": "134217728",
     }
-    if rocksdb_state:
-        conf["spark.sql.streaming.stateStore.providerClass"] = _ROCKSDB_PROVIDER
-    return conf
 
 
 def get_spark(
     app_name: str = "rust_cdc_validator_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
@@ -65,7 +44,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
-    for k, v in base_conf(shuffle_partitions, rocksdb_state=rocksdb_state).items():
+    for k, v in base_conf(shuffle_partitions).items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -55,11 +55,6 @@ def is_load_file(path: str) -> bool:
     return "LOAD" in posixpath.basename(path)
 
 
-def date_path(day: datetime) -> str:
-    """Zero-padded ``YYYY/MM/DD/`` fragment (reference: s3_operator.rs:145-154)."""
-    return f"{day.year:04d}/{day.month:02d}/{day.day:02d}/"
-
-
 _DATA_SUFFIXES = (".parquet", ".csv", ".csv.gz")
 
 

@@ -256,8 +256,7 @@ def vacuum_edge_state_versions(
     heal_orphans: bool = True,
     dry_run: bool = False,
 ) -> dict:
-    """Retention for :func:`maintain_edge_state`'s version chain — the
-    edge-state sibling of ``operators/state.gc_state_versions``.
+    """Retention for :func:`maintain_edge_state`'s version chain.
 
     The bucket-selective advance makes versions SHARE adjacency files
     (an untouched bucket's file is referenced by every later manifest
@@ -292,10 +291,10 @@ def vacuum_edge_state_versions(
     import re
 
     from rust_cdc_validator_spark.operators.graphstate import (
+        _fs_list_names,
         _load_adj_manifest,
         _resolve_adj_entry,
     )
-    from rust_cdc_validator_spark.operators.state import _fs_list_names
     from rust_cdc_validator_spark.sources.manifest import hadoop_fs
 
     if keep_last < 1:

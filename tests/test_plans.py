@@ -93,8 +93,8 @@ def test_bm25_single_scan_and_takeordered(spark, sf_dir):
 
 def test_base_conf_block():
     """The shipped config block: AQE family on, UTC, Arrow, 128MB splits;
-    RocksDB streaming state is an opt-in static conf."""
-    from rust_cdc_validator_spark.session import _ROCKSDB_PROVIDER, base_conf
+    streaming state stays on Spark's default provider."""
+    from rust_cdc_validator_spark.session import base_conf
 
     conf = base_conf(64)
     assert conf["spark.sql.adaptive.enabled"] == "true"
@@ -103,8 +103,6 @@ def test_base_conf_block():
     assert conf["spark.sql.files.maxPartitionBytes"] == "134217728"
     assert conf["spark.sql.shuffle.partitions"] == "64"
     assert "spark.sql.streaming.stateStore.providerClass" not in conf
-    rocks = base_conf(64, rocksdb_state=True)
-    assert rocks["spark.sql.streaming.stateStore.providerClass"] == _ROCKSDB_PROVIDER
 
 
 def test_corpus_prep_chain_text_shuffle_budget(spark, sf_dir):

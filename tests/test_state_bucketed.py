@@ -318,250 +318,3 @@ def test_dropping_old_version_leaves_linked_version_readable(spark, state_table)
     after = sorted(map(tuple, spark.table(new).collect()))
     assert after == want
     assert len(after) == 200
-
-
-# ---------------------------------------------------------------------------
-# Version-manifest state (r7)
-# ---------------------------------------------------------------------------
-
-
-def test_manifest_chain_equals_full_replay(spark, tmp_path):
-    """Property: chaining manifest merges batch-by-batch over ANY random
-    change log equals replaying the whole log at once — the chained-merge
-    contract, now against the manifest reader."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from rust_cdc_validator_spark.operators.state import (
-        init_state_manifest,
-        merge_into_state_manifest,
-        read_state_manifest,
-    )
-
-    ops = st.sampled_from(["I", "U", "D"])
-    keys = st.integers(min_value=0, max_value=5)
-    vals = st.integers(min_value=-99, max_value=99)
-    logs = st.lists(st.tuples(keys, ops, vals), min_size=1, max_size=24)
-
-    def to_df(log, offset=0):
-        rows = [(k, str(v), op, offset + i) for i, (k, op, v) in enumerate(log)]
-        schema = "id long, val string, Op string, _seq long"
-        return (
-            spark.createDataFrame(rows, schema)
-            if rows
-            else spark.createDataFrame([], schema)
-        )
-
-    case = {"n": 0}
-
-    @settings(max_examples=6, deadline=None,
-              suppress_health_check=[HealthCheck.too_slow])
-    @given(logs, st.data())
-    def run(log, data):
-        case["n"] += 1
-        root = str(tmp_path / f"mstate_{case['n']}")
-        cut1 = data.draw(st.integers(min_value=0, max_value=len(log)))
-        cut2 = data.draw(st.integers(min_value=cut1, max_value=len(log)))
-        init_state_manifest(
-            spark, net_effect(to_df(log[:cut1]), ["id"]).drop("Op", "_seq"),
-            root, ["id"], n_buckets=4,
-        )
-        merge_into_state_manifest(spark, root, to_df(log[cut1:cut2], offset=cut1))
-        v = merge_into_state_manifest(spark, root, to_df(log[cut2:], offset=cut2))
-        got = sorted(map(tuple, read_state_manifest(spark, root, v).collect()))
-        want = sorted(
-            map(tuple, net_effect(to_df(log), ["id"]).drop("Op", "_seq").collect())
-        )
-        assert got == want
-
-    run()
-
-
-def test_manifest_untouched_buckets_carry_as_paths(spark, tmp_path):
-    """Zero-copy contract: buckets the delta does not touch appear in the
-    new manifest as the OLD version's file paths verbatim — no new file is
-    written for them on any store (the manifest-layer replacement for the
-    object-store copy fallback)."""
-    from rust_cdc_validator_spark.operators.state import (
-        _load_manifest,
-        _version_bucket_files,
-        bucket_id,
-        init_state_manifest,
-        merge_into_state_manifest,
-        read_state_manifest,
-    )
-
-    root = str(tmp_path / "mstate")
-    state0 = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(200)], "id long, val string"
-    )
-    init_state_manifest(spark, state0, root, ["id"], n_buckets=8)
-    delta = _log(spark, [(1, "x", "U", 500), (2, None, "D", 501), (300, "n", "I", 502)])
-    touched = {
-        r[0]
-        for r in spark.createDataFrame([(1,), (2,), (300,)], "id long")
-        .select(bucket_id(["id"], 8).alias("b"))
-        .distinct()
-        .collect()
-    }
-    v1 = merge_into_state_manifest(spark, root, delta)
-    m0 = _load_manifest(spark, root, 0)
-    m1 = _load_manifest(spark, root, v1)
-    untouched = set(m0["buckets"]) - touched
-    assert untouched, "fixture must exercise the carry path"
-    for b in untouched:
-        assert m1["buckets"][b] == m0["buckets"][b]  # identical paths: zero copy
-    # the new version's data dir holds ONLY touched buckets' files
-    assert set(_version_bucket_files(spark, root, v1)) <= touched
-    # and the assembled state is correct
-    got = {r["id"]: r["val"] for r in read_state_manifest(spark, root).collect()}
-    assert got[1] == "x" and 2 not in got and got[300] == "n" and got[0] == "v0"
-    assert len(got) == 200  # 200 - 1 delete + 1 insert
-
-
-def test_manifest_equivalent_to_directory_layout(spark, state_table, tmp_path):
-    """The manifest path and merge_into_state_touched produce identical
-    state rows for the same delta."""
-    from rust_cdc_validator_spark.operators.state import (
-        init_state_manifest,
-        merge_into_state_manifest,
-        merge_into_state_touched,
-        read_state_manifest,
-    )
-
-    state0 = net_effect(
-        _log(spark, [(i, f"v{i}", None, i) for i in range(100)]), ["id"]
-    ).drop("Op", "_seq")
-    delta = _log(spark, [(3, "x", "U", 500), (7, None, "D", 501), (200, "n", "I", 502)])
-
-    save_state_bucketed(state0, state_table, ["id"], n_buckets=8)
-    via_dir = merge_into_state_touched(
-        spark, state_table, delta, ["id"], f"{state_table}_v2"
-    )
-
-    root = str(tmp_path / "mstate")
-    init_state_manifest(spark, state0, root, ["id"], n_buckets=8)
-    v = merge_into_state_manifest(spark, root, delta)
-    via_manifest = read_state_manifest(spark, root, v)
-
-    assert sorted(map(tuple, via_dir.collect())) == sorted(
-        map(tuple, via_manifest.collect())
-    )
-
-
-def test_manifest_reader_latest_and_errors(spark, tmp_path):
-    from rust_cdc_validator_spark.operators.state import (
-        init_state_manifest,
-        latest_state_version,
-        merge_into_state_manifest,
-        read_state_manifest,
-    )
-
-    root = str(tmp_path / "mstate")
-    assert latest_state_version(spark, root) is None
-    with pytest.raises(ValueError, match="no state versions"):
-        read_state_manifest(spark, root)
-    with pytest.raises(ValueError, match="init first"):
-        merge_into_state_manifest(spark, root, _log(spark, [(1, "a", "I", 1)]))
-    init_state_manifest(
-        spark, spark.createDataFrame([(1, "a")], "id long, val string"),
-        root, ["id"], n_buckets=4,
-    )
-    v = merge_into_state_manifest(spark, root, _log(spark, [(2, "b", "I", 9)]))
-    assert latest_state_version(spark, root) == v == 1
-    # default read = latest
-    assert read_state_manifest(spark, root).count() == 2
-
-
-def test_manifest_gc_respects_shared_files(spark, tmp_path):
-    """r7: version GC works by REACHABILITY — an old version's files that
-    newer manifests still reference (untouched-bucket carryover) must
-    survive; only unreferenced files and dropped manifests are deleted,
-    and the kept versions stay readable afterward."""
-    from rust_cdc_validator_spark.operators.state import (
-        _load_manifest,
-        gc_state_versions,
-        init_state_manifest,
-        latest_state_version,
-        merge_into_state_manifest,
-        read_state_manifest,
-    )
-
-    root = str(tmp_path / "mstate")
-    state0 = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(200)], "id long, val string"
-    )
-    init_state_manifest(spark, state0, root, ["id"], n_buckets=8)
-    merge_into_state_manifest(spark, root, _log(spark, [(1, "x", "U", 500)]))
-    merge_into_state_manifest(spark, root, _log(spark, [(2, "y", "U", 600)]))
-    assert latest_state_version(spark, root) == 2
-
-    before = sorted(map(tuple, read_state_manifest(spark, root, 2).collect()))
-    live = {
-        rel
-        for rels in _load_manifest(spark, root, 2)["buckets"].values()
-        for rel in rels
-    }
-    # v0 must still be contributing carried files (shared across versions)
-    assert any(rel.startswith("v000000/") for rel in live)
-
-    plan = gc_state_versions(spark, root, keep_versions=1, dry_run=True)
-    assert plan["kept_versions"] == [2]
-    assert plan["dropped_versions"] == [0, 1]
-    assert not set(plan["deleted_files"]) & live
-    assert set(plan["retained_shared_files"]) <= live
-
-    result = gc_state_versions(spark, root, keep_versions=1)
-    assert result["deleted_files"] == plan["deleted_files"]
-    # dropped manifests are gone; the kept version reads identically
-    with pytest.raises(Exception):
-        _load_manifest(spark, root, 0)
-    assert latest_state_version(spark, root) == 2
-    after = sorted(map(tuple, read_state_manifest(spark, root, 2).collect()))
-    assert after == before
-    # a further merge still chains off the surviving manifest
-    v3 = merge_into_state_manifest(spark, root, _log(spark, [(3, "z", "U", 700)]))
-    got = {r["id"]: r["val"] for r in read_state_manifest(spark, root, v3).collect()}
-    assert got[1] == "x" and got[2] == "y" and got[3] == "z"
-
-
-def test_manifest_orphan_data_dir_is_invisible_and_retry_heals(spark, tmp_path):
-    """r7 review fix: the manifest is the COMMIT record. A merge that dies
-    after writing v{n}/data but before manifest.json must leave the chain
-    readable (latest ignores the orphan) and the retried merge must
-    overwrite the orphan and commit cleanly."""
-    import os
-
-    from rust_cdc_validator_spark.operators.state import (
-        gc_state_versions,
-        init_state_manifest,
-        latest_state_version,
-        merge_into_state_manifest,
-        read_state_manifest,
-    )
-
-    root = str(tmp_path / "mstate")
-    init_state_manifest(
-        spark,
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string"),
-        root, ["id"], n_buckets=4,
-    )
-    # simulate the crash: a data-only version dir with no manifest
-    orphan = os.path.join(root, "v000001", "data", "_mb=0")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-junk.parquet"), "wb") as f:
-        f.write(b"not a real parquet file")
-
-    assert latest_state_version(spark, root) == 0
-    assert read_state_manifest(spark, root).count() == 2
-    # gc also ignores the orphan
-    plan = gc_state_versions(spark, root, keep_versions=1, dry_run=True)
-    assert plan["kept_versions"] == [0] and plan["dropped_versions"] == []
-
-    # the retried merge overwrites the orphan data and commits v1
-    v = merge_into_state_manifest(spark, root, _log(spark, [(3, "c", "I", 9)]))
-    assert v == 1 and latest_state_version(spark, root) == 1
-    got = {r["id"]: r["val"] for r in read_state_manifest(spark, root).collect()}
-    assert got == {1: "a", 2: "b", 3: "c"}
-    # the junk file is gone (overwritten by the retry)
-    assert not os.path.exists(os.path.join(orphan, "part-junk.parquet"))

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import pyarrow as pa
@@ -471,6 +473,15 @@ def test_hll_prereduce_input_is_register_sized(spark):
     assert key(glob) == key(truth)
 
 
+def _make_newer(path, than):
+    """Give ``path`` an mtime one second after ``than``'s. The file source
+    reads files in mtime order (``maxFilesPerTrigger=1``: one per batch);
+    two files written back to back often share a millisecond mtime, and
+    the tie then falls to listing order."""
+    t = os.stat(than).st_mtime + 1
+    os.utime(path, (t, t))
+
+
 def test_concurrency_gauge_equals_batch_on_ordered_feed(spark, tmp_path):
     """Streaming gauge (r10) on a time-ordered boundary feed split
     across micro-batches must equal the batch sweep-line operator:
@@ -514,6 +525,7 @@ def test_concurrency_gauge_equals_batch_on_ordered_feed(spark, tmp_path):
 
     w("a.parquet", bounds[:mid])
     w("b.parquet", bounds[mid:])
+    _make_newer(src / "b.parquet", src / "a.parquet")
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", "1").parquet(str(src)))
     q = (concurrency_gauge_stateful(stream, "g").writeStream
@@ -558,6 +570,7 @@ def test_concurrency_gauge_current_exact_under_disorder(spark, tmp_path):
     # batch 2: a LATE pair that predates batch 1 entirely
     pq.write_table(pa.table({"g": ["x"] * 2, "ts": [0, 10],
                              "delta": [1, -1]}), str(src / "b.parquet"))
+    _make_newer(src / "b.parquet", src / "a.parquet")
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", "1").parquet(str(src)))
     q = (concurrency_gauge_stateful(stream, "g").writeStream

@@ -16,8 +16,8 @@ Spark shape:
 * codebook training is distributed ACROSS SUBSPACES: a bounded sample
   (same contract as ``similarity._fit_coarse_quantizer``) explodes into
   (subspace, subvector) rows, one grouped Arrow task per subspace runs a
-  seeded Lloyd's k-means on its own sample. Only the codebooks (m × 256 ×
-  sub_dim floats, ~100 KB) ever reach the driver.
+  seeded Lloyd's k-means on its own sample, read in id order. Only the
+  codebooks (m × 256 × sub_dim floats, ~100 KB) ever reach the driver.
 * encoding is map-side (broadcast codebooks, one argmin matmul per Arrow
   batch); codes land in ``codes/`` PARTITIONED BY the IVF cell, so a probe
   prunes to n_probe/n_cells of the CODES — never touching full vectors.
@@ -102,6 +102,7 @@ def _lloyd(x: np.ndarray, k: int, seed: int, iters: int = 15) -> np.ndarray:
 
 def train_pq_codebooks(
     corpus: DataFrame,
+    id_col: str = "vec_id",
     vec_col: str = "embedding",
     m: int = 8,
     sample_size: int = 10_000,
@@ -109,20 +110,26 @@ def train_pq_codebooks(
 ) -> np.ndarray:
     """Fit per-subspace codebooks on a bounded corpus sample; returns
     (m, 256, dim/m) float64. Distributed across subspaces: each of the m
-    grouped tasks fits only its own subvectors."""
-    # fabricate a row id — _unit_vectors pins _id to LongType and the
-    # caller's first column may be anything
-    src = corpus.select(
-        F.monotonically_increasing_id().alias("_rid"), F.col(vec_col)
-    )
-    unit = _unit_vectors(src, "_rid", vec_col).select("_v")
+    grouped tasks fits only its own subvectors.
+
+    ``id_col`` must hold unique integral ids. The sample is a hash of
+    (id, ``seed``) and each subspace fits its rows in id order, so both
+    depend only on the ids and ``seed``: the codebooks do not change with
+    the corpus's partitioning or the session's thread count."""
+    unit = _unit_vectors(corpus, id_col, vec_col)
     cap = 64 * sample_size
     probed = unit.limit(cap + 1).count()
     fraction = min(1.0, sample_size / max(min(probed, cap), 1))
-    sample = unit if fraction >= 1.0 else unit.sample(False, fraction, seed)
+    if fraction < 1.0:
+        buckets = 1 << 30
+        unit = unit.filter(
+            F.pmod(F.xxhash64("_id", F.lit(seed)), F.lit(buckets))
+            < int(fraction * buckets)
+        )
 
     sub_schema = T.StructType(
         [
+            T.StructField("_id", T.LongType(), False),
             T.StructField("sub", T.IntegerType(), False),
             T.StructField("subvec", T.ArrayType(T.DoubleType()), False),
         ]
@@ -139,6 +146,7 @@ def train_pq_codebooks(
             sub = v.reshape(b, m, dim // m)
             yield pd.DataFrame(
                 {
+                    "_id": np.repeat(pdf["_id"].to_numpy(), m),
                     "sub": np.tile(np.arange(m, dtype=np.int32), b),
                     "subvec": list(sub.reshape(b * m, dim // m)),
                 }
@@ -154,6 +162,9 @@ def train_pq_codebooks(
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         s = int(pdf["sub"].iloc[0])
+        # the shuffle delivers rows in partition order; k-means++ seeds
+        # pick by index, so fix the order by id
+        pdf = pdf.sort_values("_id", kind="stable")
         x = np.stack(pdf["subvec"].to_numpy())
         cents = _lloyd(x, N_CODES, seed + s)
         return pd.DataFrame(
@@ -165,7 +176,7 @@ def train_pq_codebooks(
         )
 
     rows = (
-        sample.mapInPandas(split_rows, sub_schema)
+        unit.mapInPandas(split_rows, sub_schema)
         .groupBy("sub")
         .applyInPandas(fit, cb_schema)
         .collect()
@@ -225,7 +236,12 @@ def build_ivfpq_index(
         corpus_rows=corpus_rows,
     )
     books = train_pq_codebooks(
-        corpus, vec_col=vec_col, m=m, sample_size=sample_size, seed=seed
+        corpus,
+        id_col=id_col,
+        vec_col=vec_col,
+        m=m,
+        sample_size=sample_size,
+        seed=seed,
     )
     bc = spark.sparkContext.broadcast(books)
     vectors = spark.read.parquet(f"{path}/vectors")

@@ -9,6 +9,7 @@ that silently doubles per-iteration actions fails here before it ships.
 
 from __future__ import annotations
 
+import shutil
 import time
 
 from pyspark.sql import functions as F
@@ -232,12 +233,14 @@ def test_harmonic_closeness_1m_edges_wall_and_job_count(spark, tmp_path):
     pivots = spark.createDataFrame([(i,) for i in range(8)], "node long")
 
     def run():
-        # the shared forward pass memoizes per (state, pivots, horizon) —
-        # clear it so BOTH runs measure the full pass (the stability pin
-        # is about per-run job structure, not the cache)
+        # the shared forward pass memoizes per (state, pivots, horizon) in
+        # two layers: the in-process cache and the levels persisted under
+        # {path}/derived — clear both so BOTH runs measure the full pass
+        # (the stability pin is about per-run job structure, not the memo)
         from rust_cdc_validator_spark.operators import graphstate as gs
 
         gs._PIVOT_BFS_CACHE.clear()
+        shutil.rmtree(f"{path}/derived", ignore_errors=True)
         out = harmonic_closeness_from_state(spark, path, pivots, max_hops=3)
         return out.agg(
             F.count(F.lit(1)).alias("n"), F.max("n_reached").alias("r")
@@ -277,7 +280,10 @@ def test_betweenness_1m_edges_wall_and_job_count(spark, tmp_path):
     def run():
         from rust_cdc_validator_spark.operators import graphstate as gs
 
-        gs._PIVOT_BFS_CACHE.clear()  # measure the full pass both runs
+        # measure the full pass both runs: clear the in-process memo and
+        # the levels persisted under {path}/derived
+        gs._PIVOT_BFS_CACHE.clear()
+        shutil.rmtree(f"{path}/derived", ignore_errors=True)
         out = betweenness_from_state(spark, path, pivots, max_hops=2)
         return out.agg(
             F.count(F.lit(1)).alias("n"),

@@ -70,6 +70,20 @@ def test_codebooks_deterministic_and_shaped(spark):
     assert np.allclose(a, b)
 
 
+@pytest.mark.parametrize("sample_size", [10_000, 300])
+def test_codebooks_independent_of_partitioning(spark, sample_size):
+    # 400 rows > 256 codes, so k-means++ seeding sees the row order; with
+    # sample_size=300 the sample itself is drawn too
+    df = _clustered(spark, n_clusters=8, per=50)
+    one = train_pq_codebooks(
+        df.repartition(1), m=4, sample_size=sample_size, seed=7
+    )
+    seven = train_pq_codebooks(
+        df.repartition(7), m=4, sample_size=sample_size, seed=7
+    )
+    assert np.array_equal(one, seven)
+
+
 def test_index_layout_and_code_bytes(spark, tmp_path):
     df = _clustered(spark)
     path = str(tmp_path / "idx")

@@ -1,23 +1,20 @@
-"""MinHash / SimHash primitives, built on Spark's JVM-side xxhash64.
+"""MinHash / SimHash primitives.
 
-MinHash: k independent permutations are simulated as
-``xxhash64(seed_i, element)`` min-reduced per document — the standard
-one-hash-function-per-permutation construction.
-
-Two formulations:
-* Column-level (``minhash_signature`` / ``simhash64``): self-contained
-  array expressions. Fine for small k / short feature arrays, but Catalyst
-  cannot share the feature subexpression across the k hash expressions, so
-  cost grows k× — do not use on the hot path.
-* DataFrame-level (``minhash_signatures`` / ``simhash_signatures``):
-  explode features to rows, compute k hashes per row (one codegen stage),
-  min/sum-aggregate per doc (map-side partial agg). This is the shape that
-  scales to 100 TB: one narrow shuffle of (id, k longs), no expression
-  blow-up.
+MinHash: k independent permutations are simulated as universal hashes
+over one md5 base hash per shingle, min-reduced per document — the
+standard one-hash-function-per-permutation construction
+(``minhash_signatures_fast``); ``lsh_bands`` cuts a signature into
+banded bucket keys.
 
 SimHash: 64-bit signature where bit b = sign of the sum over features of
 (+1/-1 depending on feature-hash bit b). Hamming-close signatures ⇒ similar
 documents.
+
+Signatures are computed per document, so the ``*_fast`` functions run
+as one map-side ``mapInPandas`` stage with no shuffle — the shape that
+scales to 100 TB. ``simhash_signatures`` is the JVM-side form over a
+caller-built feature array: explode features to rows, one xxhash64 per
+feature, and a per-doc bit-vote aggregate (map-side partial agg).
 """
 
 from __future__ import annotations
@@ -26,24 +23,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rust_cdc_validator_spark.plans.inspect import ensure_parallelism
-
-
-def minhash_signature(features: Column, num_hashes: int = 64) -> Column:
-    """Array of ``num_hashes`` min-hashes over the feature array (shingles).
-
-    Empty feature arrays get Long.MaxValue sentinels so they never collide
-    with real signatures.
-    """
-    sentinel = F.lit(0x7FFFFFFFFFFFFFFF).cast("long")
-    return F.array(
-        *[
-            F.coalesce(
-                F.array_min(F.transform(features, lambda x: F.xxhash64(x, F.lit(i)))),
-                sentinel,
-            )
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def lsh_bands(signature: Column, num_bands: int, rows_per_band: int) -> Column:
@@ -69,64 +48,12 @@ def lsh_bands(signature: Column, num_bands: int, rows_per_band: int) -> Column:
     )
 
 
-def simhash64(features: Column) -> Column:
-    """64-bit SimHash over a feature array.
-
-    bit b of the signature = 1 iff sum over features of sign(bit b of
-    xxhash64(feature)) is positive.
-    """
-    hashes = F.transform(features, lambda x: F.xxhash64(x))
-
-    def bit_vote(b: int) -> Column:
-        # +1 when bit b set, -1 otherwise, summed across features
-        votes = F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(F.lit(1 << b).cast("long")) != 0, 1).otherwise(-1),
-        )
-        return F.when(votes > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-
-    sig = bit_vote(0)
-    for b in range(1, 63):  # bit 63 omitted: keep the signature non-negative
-        sig = sig.bitwiseOR(bit_vote(b))
-    return sig
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit signatures (popcount of XOR)."""
     return F.bit_count(a.bitwiseXOR(b))
 
 
 # ------------------------------------------------------- DataFrame-level
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    features: Column,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """(id, _sig: array<long>) per row via explode → k hashes → min-agg.
-
-    Docs whose feature array is empty get a MaxValue-sentinel signature.
-    """
-    sentinel = 0x7FFFFFFFFFFFFFFF
-    feats = ensure_parallelism(df).select(
-        F.col(id_col).alias("_id"), F.explode_outer(features).alias("_f")
-    )
-    hashed = feats.select(
-        "_id", *[F.xxhash64("_f", F.lit(i)).alias(f"_h{i}") for i in range(num_hashes)]
-    )
-    agg = hashed.groupBy("_id").agg(
-        *[
-            F.coalesce(F.min(f"_h{i}"), F.lit(sentinel)).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    return agg.select(
-        "_id", F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("_sig")
-    )
 
 
 def minhash_signatures_fast(
@@ -148,9 +75,7 @@ def minhash_signatures_fast(
 
     Shingle semantics mirror ``text.word_shingles``: whitespace tokens,
     n-word windows, docs with < n tokens contribute one all-tokens shingle.
-    Empty docs get the MaxValue sentinel signature. Signatures are NOT
-    comparable across formulations (different hash family) — band-bucket
-    collisions and Jaccard estimates are statistically equivalent.
+    Empty docs get the MaxValue sentinel signature.
     """
     import hashlib
 
@@ -258,8 +183,8 @@ def simhash_signatures(
 ) -> DataFrame:
     """(id, _sim: long) per row via explode → per-feature hash → bit votes.
 
-    Same result as ``simhash64`` but with one aggregation stage instead of
-    63 array folds per row.
+    Bit b of the signature is 1 iff more features have bit b of their
+    xxhash64 set than clear.
     """
     feats = ensure_parallelism(df).select(
         F.col(id_col).alias("_id"), F.explode_outer(features).alias("_f")

@@ -23,16 +23,13 @@ def _str_array_expr(words) -> Column:
     per-word F.lit loop costs a py4j round trip per element on every
     query build (the HyperBall-lane fix applied to literals).
 
-    Backslashes are escaped BEFORE quotes (a word containing ``\\``
-    would otherwise change meaning), and any word the default parser
-    could still misread (escapedStringLiterals on, exotic control
-    chars) falls back to the exact per-element Column literal."""
-    if any(not w.isprintable() or "\n" in w or "\r" in w for w in words):
+    The SQL form is used only when every word is printable and holds no
+    quote or backslash: such a word reads the same inside ``'...'``
+    whatever ``spark.sql.parser.escapedStringLiterals`` says. Any other
+    word list falls back to exact per-element Column literals."""
+    if any(not w.isprintable() or "'" in w or "\\" in w for w in words):
         return F.array(*[F.lit(w) for w in words])
-    quoted = ", ".join(
-        "'" + w.replace("\\", "\\\\").replace("'", "\\'") + "'" for w in words
-    )
-    return F.expr(f"array({quoted})")
+    return F.expr("array(" + ", ".join(f"'{w}'" for w in words) + ")")
 
 
 def tokens(text: Column) -> Column:
@@ -72,27 +69,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-def char_ngrams(text: Column, n: int = 3) -> Column:
-    """Array of character n-grams (for language-ID profiles / SimHash).
-
-    Built like :func:`word_shingles` — a zip of n shifted char-array
-    slices, NOT ``substring(t, i, n)`` inside a ``transform`` lambda: the
-    interpreted HOF re-evaluates the ``lower(text)`` subtree once PER
-    ELEMENT, making the per-index form O(len²) per document (the same
-    trap SCALE.md documents for exact-substring windows). The slice form
-    evaluates the lowered text a constant number of times per row. Output
-    is value-identical, edge cases included (empty/short/unicode —
-    parity-tested in test_text_multimodal.py).
-    """
-    t = F.lower(text)
-    chars = F.split(t, "")
-    count = F.greatest(F.length(t) - F.lit(n - 1), F.lit(1))
-    zipped = F.arrays_zip(*[F.slice(chars, k + 1, count) for k in range(n)])
-    return F.transform(
-        zipped, lambda s: F.concat_ws("", *[s[str(k)] for k in range(n)])
-    )
-
-
 def stopword_ratio(text: Column) -> Column:
     """Fraction of tokens that are stopwords — a classic quality signal."""
     toks = tokens(F.lower(text))
@@ -105,11 +81,6 @@ def punct_ratio(text: Column) -> Column:
     """Punctuation chars / total chars."""
     n_punct = F.length(F.regexp_replace(text, r"[^\p{Punct}]", ""))
     return n_punct / F.greatest(F.length(text), F.lit(1))
-
-
-def mean_token_length(text: Column) -> Column:
-    no_space = F.length(F.regexp_replace(text, r"\s+", ""))
-    return no_space / F.greatest(token_count(text), F.lit(1))
 
 
 def quality_score(text: Column) -> Column:

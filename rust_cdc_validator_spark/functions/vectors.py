@@ -31,19 +31,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double"))
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def quantize_unit_int8(a: Column) -> Column:
     """array<double> UNIT vector → array<tinyint> at fixed scale 127
     (components of a unit vector lie in [-1, 1], so no per-row scale is

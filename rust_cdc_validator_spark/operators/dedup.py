@@ -329,20 +329,6 @@ def minhash_near_dup_pairs(
         sig.unpersist()
 
 
-def minhash_similarity(
-    df: DataFrame,
-    candidates: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Estimate Jaccard for candidate pairs as fraction of agreeing
-    minhashes (the MinHash estimator)."""
-    sig = minhash_signatures_fast(df, id_col, text_col, shingle_n, num_hashes)
-    return _estimate_jaccard(sig, candidates, num_hashes)
-
-
 def _estimate_jaccard(sig: DataFrame, candidates: DataFrame, num_hashes: int) -> DataFrame:
     j = (
         candidates.join(sig.withColumnRenamed("_id", "id_a").withColumnRenamed("_sig", "_sig_a"), "id_a")

@@ -28,6 +28,14 @@ no metastore dependency, any Spark session can read it):
   :func:`edge_state_refit_needed` compares the CURRENT canonical edge
   count against ``n_edges``, mirroring ``similarity.ivf_refit_needed``.
 
+Everything the queries derive from a state — its scalar facts (params,
+adj manifest, probes) and its derived relations (the long-encoded node
+dict and adjacency, pivot-BFS levels, HyperBall registers, each
+``localCheckpoint``ed) — is memoized in-process per immutable state
+version through ``operators/_memo``; nothing derived is written under
+``path``. Writing the adj manifest invalidates the path's memo, so a
+rebuild in place never serves the old graph.
+
 Semantics contract: undirected builds canonicalize (least, greatest),
 DROP self-loops, and SUM weights across duplicate/reversed input rows —
 exactly the relation ``label_propagation`` / ``shortest_hops``
@@ -54,6 +62,11 @@ from rust_cdc_validator_spark.operators.graph import (
     _pagerank_loop,
     _parse_bytes,
     _RANK_ROW_BYTES,
+)
+from rust_cdc_validator_spark.operators._memo import (
+    _norm_path,
+    index_fact,
+    invalidate_index,
 )
 from rust_cdc_validator_spark.sources.manifest import hadoop_fs
 
@@ -283,90 +296,23 @@ def _write_adj_manifest(
     _fs_write_text(
         spark, _adj_manifest_path(path), json.dumps(manifest, indent=1)
     )
-    # a rebuild replaced the record: drop EVERY per-state memo under this
-    # path — the scalar facts AND the derived DataFrame relations (pivot-
-    # BFS levels, HyperBall lane registers), which would otherwise serve
-    # the OLD graph's levels to closeness/betweenness/NF queries. The two
-    # DataFrame caches key on the normalized path (pivot-BFS on the raw
-    # path inside a tuple), so match by normalized equality.
-    norm = _norm_state_path(path)
-    for cache in (_ADJ_MANIFEST_CACHE, _STATE_FACTS_CACHE):
-        for k in [k for k in cache if _norm_state_path(k) == norm]:
-            del cache[k]
-    for k in [k for k in _PIVOT_BFS_CACHE if _norm_state_path(k[0]) == norm]:
-        _, levels, _ = _PIVOT_BFS_CACHE.pop(k)
-        for df in levels:  # release the checkpointed blocks, best effort
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    for k in [k for k in _NF_REGS_CACHE if k[0] == norm]:
-        for df in _NF_REGS_CACHE.pop(k):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    enc = _ENC_GRAPH_CACHE.pop(norm, None)
-    if enc is not None:
-        for df in [enc["dict"], *enc["adj"].values()]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    # a rebuild also invalidates the PERSISTED derived artifacts (the
-    # enc_dict/enc_adj parquet): delete the whole derived/ subtree so a
-    # stale encoding can never serve the new graph
-    try:
-        fs, p, _ = hadoop_fs(spark, f"{path}/derived")
-        if fs.exists(p):
-            fs.delete(p, True)
-    except Exception:
-        pass
+    # a rebuild replaced the record: drop every memoized fact and derived
+    # relation under this path, or queries would serve the OLD graph
+    invalidate_index(path)
 
 
-#: path -> parsed manifest (or None for legacy flat-adj states). States
-#: are immutable versions by contract, so the commit record never changes
-#: under a path; without this cache EVERY from-state query execution paid
-#: an existence probe plus a line-by-line py4j manifest read (~0.3 s/call
-#: measured at sf0.1 — the r12-D bench regression on the graph family).
-#: _write_adj_manifest invalidates its key, covering in-place rebuilds.
-_ADJ_MANIFEST_CACHE: dict[str, dict | None] = {}
-
-#: path -> {fact key: value} of per-state SCALAR facts that are pure
-#: functions of the immutable state under that path: the params row,
-#: pagerank's 3-scalar role probe, the SSSP min-weight guard. Same
-#: contract as _ADJ_MANIFEST_CACHE (states are immutable versions; the
-#: writers invalidate alongside the manifest). Without this, every
-#: from-state query EXECUTION re-ran the scan behind the fact — for the
-#: min(w) guard that was a full O(|E|) adjacency pass per call (guide
-#: §1.2: remove passes the job does not need; measured 0.10-0.27 s/call
-#: at sf0.1, and a whole extra state scan per analytic at scale).
-_STATE_FACTS_CACHE: dict[str, dict] = {}
-
-
-def _state_fact(path: str, key: str, compute):
-    """Memoized scalar fact of an immutable edge state."""
-    facts = _STATE_FACTS_CACHE.setdefault(path, {})
-    if key not in facts:
-        facts[key] = compute()
-    return facts[key]
-
-
-def _load_adj_manifest(spark: SparkSession, path: str) -> dict | None:
-    """None for a legacy (pre-manifest, flat ``adj/``) state."""
+def _load_adj_manifest(spark: SparkSession, path: str) -> dict:
+    """The parsed adj manifest, memoized per immutable state path: without
+    the memo EVERY from-state query execution paid a line-by-line py4j
+    manifest read (~0.3 s/call measured at sf0.1)."""
     import json
 
-    if path in _ADJ_MANIFEST_CACHE:
-        return _ADJ_MANIFEST_CACHE[path]
-    uri = _adj_manifest_path(path)
-    fs, p, _ = hadoop_fs(spark, uri)
-    if not fs.exists(p):
-        m = None
-    else:
-        m = json.loads(_fs_read_text(spark, uri))
+    def load() -> dict:
+        m = json.loads(_fs_read_text(spark, _adj_manifest_path(path)))
         m["buckets"] = {int(k): v for k, v in m["buckets"].items()}
-    _ADJ_MANIFEST_CACHE[path] = m
-    return m
+        return m
+
+    return index_fact(spark, path, "adj_manifest", load)
 
 
 def _own_adj_files(spark: SparkSession, path: str) -> dict[int, list[str]]:
@@ -509,7 +455,7 @@ def advance_edge_state(
     recomputed from the resolved adjacency. No fact-table exchange
     anywhere.
     """
-    if _norm_state_path(new_path) == _norm_state_path(path):
+    if _norm_path(new_path) == _norm_path(path):
         raise ValueError(
             "advance_edge_state writes a NEW state version: new_path must "
             "differ from path (readers of the old version would race the "
@@ -529,19 +475,6 @@ def advance_edge_state(
     dexp = _expand_directions(canon, directed)
 
     m = _load_adj_manifest(spark, path)
-    if m is None:
-        # legacy flat-adj state: full merge (upgrades to the bucket-dir
-        # + manifest layout on write, so the NEXT advance is selective)
-        old = edge_state_adjacency(spark, path).select("src", "dst", "w")
-        merged = (
-            old.unionByName(dexp)
-            .groupBy("src", "dst")
-            .agg(F.sum("w").alias("w"))
-            .filter(F.col("w") > 0)
-        )
-        _write_state(spark, merged, new_path, directed, weighted, n_buckets)
-        return
-
     # the delta subtree feeds both the touched-bucket probe and the
     # merge — materialize it once (it is O(|delta|) by contract)
     dexp = dexp.localCheckpoint(eager=True)
@@ -591,26 +524,13 @@ def advance_edge_state(
     )
 
 
-def _norm_state_path(p: str) -> str:
-    """Normalize a state path for the same-version guard. Non-scheme
-    paths go through ``posixpath.normpath`` (collapses ANY run of
-    redundant separators and ``.``/``..`` segments — a single
-    ``replace('//','/')`` pass missed ``///``, letting an advance
-    overwrite the state it reads); scheme-qualified paths only lose the
-    trailing slash (normpath would mangle ``s3://``)."""
-    import posixpath
-
-    if "://" in p:
-        return p.rstrip("/")
-    return posixpath.normpath(p)
-
-
 def edge_state_params(spark: SparkSession, path: str) -> dict:
     """The build's pinned parameters + size facts as a plain dict
     (memoized per immutable state path — one driver job per state, not
     per query execution)."""
     return dict(
-        _state_fact(
+        index_fact(
+            spark,
             path,
             "params",
             lambda: spark.read.parquet(f"{path}/params").first().asDict(),
@@ -620,19 +540,14 @@ def edge_state_params(spark: SparkSession, path: str) -> dict:
 
 def edge_state_adjacency(spark: SparkSession, path: str) -> DataFrame:
     """(src, dst, w, p) — direction-expanded for undirected builds.
-    Resolves through the adj manifest when present (bucket files may
-    live in a PARENT version's directory — the bucket-selective advance
-    carries untouched buckets as references, zero bytes copied); legacy
-    flat ``adj/`` dirs read directly."""
+    Resolves through the adj manifest (bucket files may live in a PARENT
+    version's directory — the bucket-selective advance carries untouched
+    buckets as references, zero bytes copied)."""
     import json
 
     from pyspark.sql.types import StructType
 
     m = _load_adj_manifest(spark, path)
-    if m is None:
-        return spark.read.parquet(f"{path}/adj").select(
-            "src", "dst", "w", "p"
-        )
     schema = StructType.fromJson(json.loads(m["schema"]))
     paths = [
         _resolve_adj_entry(path, rel)
@@ -648,89 +563,6 @@ def edge_state_nodes(spark: SparkSession, path: str) -> DataFrame:
     """(node, has_out, has_in, out_deg, in_deg, out_w)."""
     return spark.read.parquet(f"{path}/nodes")
 
-
-#: normalized state path -> {"dict": DataFrame, "adj": {src_prefix: DataFrame}}
-#: — the long-encoded graph relations (see _encoded_node_dict). Same
-#: immutable-version memo contract as _PIVOT_BFS_CACHE; invalidated by
-#: _write_adj_manifest.
-_ENC_GRAPH_CACHE: dict = {}
-
-
-def _derived_ready(spark: SparkSession, uri: str) -> bool:
-    """True iff a derived parquet relation was COMMITTED at ``uri``
-    (Spark's _SUCCESS marker — a killed writer leaves no marker, so a
-    partial directory is recomputed, never read)."""
-    try:
-        fs, p, _ = hadoop_fs(spark, f"{uri}/_SUCCESS")
-        return bool(fs.exists(p))
-    except Exception:
-        return False
-
-
-def _persist_derived(spark: SparkSession, df: DataFrame, uri: str) -> DataFrame:
-    """Write a derived relation next to its state version and read it
-    back (cold JVMs then pay a parquet scan, not the derivation — the
-    versioned-artifact contract of centroids/codebooks). Falls back to a
-    localCheckpoint when the state location is not writable, keeping the
-    old session-memo behavior."""
-    try:
-        df.write.mode("overwrite").parquet(uri)
-        return spark.read.parquet(uri)
-    except Exception:
-        return df.localCheckpoint(eager=True)
-
-
-def _read_derived_frames(
-    spark: SparkSession, base_uri: str
-) -> tuple[list[DataFrame], list[int]] | None:
-    """(frames, counts) of a committed multi-level derived artifact
-    (``{base_uri}/meta.json`` + ``level_<h>/`` parquet dirs), or None if
-    absent/partial. meta.json is written LAST, so its presence is the
-    commit record; each level additionally needs its _SUCCESS marker."""
-    import json
-
-    try:
-        meta = json.loads(_fs_read_text(spark, f"{base_uri}/meta.json"))
-    except Exception:
-        return None
-    frames = []
-    for h in range(int(meta["n"])):
-        uri = f"{base_uri}/level_{h}"
-        if not _derived_ready(spark, uri):
-            return None
-        frames.append(spark.read.parquet(uri))
-    return frames, [int(c) for c in meta.get("counts") or []]
-
-
-def _write_derived_frames(
-    spark: SparkSession,
-    base_uri: str,
-    frames: list[DataFrame],
-    counts: list[int] | None,
-) -> list[DataFrame] | None:
-    """Persist per-level frames under ``base_uri`` and return the
-    read-back frames (so warm and cold sessions share the same scan
-    path), or None when the location is not writable. Level dirs that
-    already exist are SKIPPED, not rewritten — a level's content is a
-    pure function of the immutable state version, so an extension pass
-    only writes the new depths. meta.json commits last."""
-    import json
-
-    try:
-        out = []
-        for h, df in enumerate(frames):
-            uri = f"{base_uri}/level_{h}"
-            if not _derived_ready(spark, uri):
-                df.write.mode("overwrite").parquet(uri)
-            out.append(spark.read.parquet(uri))
-        _fs_write_text(
-            spark,
-            f"{base_uri}/meta.json",
-            json.dumps({"n": len(frames), "counts": counts}),
-        )
-        return out
-    except Exception:
-        return None
 
 #: estimated in-memory bytes per node-dict row (node string + long id +
 #: parity + role flags) for the encode-join broadcast gate — deliberately
@@ -758,24 +590,17 @@ def _encoded_node_dict(spark: SparkSession, path: str) -> DataFrame:
     driver-side running offset over the per-partition counts (the
     partition count is `buckets` — bounded, driver-small).
 
-    PERSISTED as a versioned state artifact (``{path}/derived/enc_dict``)
-    on first use — cold JVMs read the parquet back instead of re-ranking
-    — and memoized per immutable state version (the pivot-BFS contract);
-    rebuild invalidation (memo pop + derived-dir delete) lives in
-    _write_adj_manifest."""
+    localCheckpointed on first use and memoized per immutable state
+    version (``_memo.index_fact``; _write_adj_manifest invalidates it on
+    rebuild)."""
+    return index_fact(spark, path, "enc_dict", lambda: _rank_nodes(spark, path))
+
+
+def _rank_nodes(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import Window
 
     from rust_cdc_validator_spark.operators.graph import _md5_parity
 
-    key = _norm_state_path(path)
-    hit = _ENC_GRAPH_CACHE.get(key)
-    if hit is not None:
-        return hit["dict"]
-    dict_uri = f"{path}/derived/enc_dict"
-    if _derived_ready(spark, dict_uri):
-        dic = spark.read.parquet(dict_uri)
-        _ENC_GRAPH_CACHE[key] = {"dict": dic, "adj": {}}
-        return dic
     buckets = int(edge_state_params(spark, path)["buckets"])
     staged = (
         edge_state_nodes(spark, path)
@@ -806,10 +631,8 @@ def _encoded_node_dict(spark: SparkSession, path: str) -> DataFrame:
             "has_in",
             "out_w",
         )
-    )
-    dic = _persist_derived(spark, dic, dict_uri)
+    ).localCheckpoint(eager=True)
     staged.unpersist()
-    _ENC_GRAPH_CACHE[key] = {"dict": dic, "adj": {}}
     return dic
 
 
@@ -828,51 +651,43 @@ def _encoded_adjacency(
     spark: SparkSession, path: str, src_prefix: str | None = None
 ) -> DataFrame:
     """(sid, did, w, p) — the state adjacency with both endpoints
-    long-encoded through :func:`_encoded_node_dict`. The unprefixed
-    relation is PERSISTED as a versioned state artifact
-    (``{path}/derived/enc_adj``) on first use — cold JVMs read it back,
-    no encode joins — and memoized; a ``src_prefix`` read (the directed
-    bipartite HITS slice) derives from it as a broadcast-gated semi-join
-    on the prefix's nids (value-identical to filtering the string src
-    first: the dict is a bijection), checkpointed per (version, prefix).
-    Every superstep thereafter joins and aggregates on 8-byte longs."""
-    dic = _encoded_node_dict(spark, path)
-    entry = _ENC_GRAPH_CACHE[_norm_state_path(path)]
-    cached = entry["adj"].get(src_prefix)
-    if cached is not None:
-        return cached
-    if src_prefix is not None:
-        base = _encoded_adjacency(spark, path, None)
-        nids = dic.filter(F.col("node").startswith(src_prefix)).select(
-            F.col("nid").alias("sid")
-        )
-        enc = base.join(
-            _dict_gate(spark, path, nids), "sid", "left_semi"
-        ).localCheckpoint(eager=True)
-        entry["adj"][src_prefix] = enc
-        return enc
-    adj_uri = f"{path}/derived/enc_adj"
-    if _derived_ready(spark, adj_uri):
-        enc = spark.read.parquet(adj_uri)
-    else:
-        adj = edge_state_adjacency(spark, path)
-        ds = _dict_gate(
-            spark,
-            path,
-            dic.select(F.col("node").alias("src"), F.col("nid").alias("sid")),
-        )
-        dd = _dict_gate(
-            spark,
-            path,
-            dic.select(F.col("node").alias("dst"), F.col("nid").alias("did")),
-        )
-        enc = _persist_derived(
-            spark,
-            adj.join(ds, "src").join(dd, "dst").select("sid", "did", "w", "p"),
-            adj_uri,
-        )
-    entry["adj"][src_prefix] = enc
-    return enc
+    long-encoded through :func:`_encoded_node_dict`, localCheckpointed
+    and memoized per (version, ``src_prefix``). A ``src_prefix`` read
+    (the directed bipartite HITS slice) derives from the unprefixed
+    relation as a broadcast-gated semi-join on the prefix's nids
+    (value-identical to filtering the string src first: the dict is a
+    bijection). Every superstep thereafter joins and aggregates on
+    8-byte longs."""
+
+    def encode() -> DataFrame:
+        dic = _encoded_node_dict(spark, path)
+        if src_prefix is not None:
+            nids = dic.filter(F.col("node").startswith(src_prefix)).select(
+                F.col("nid").alias("sid")
+            )
+            enc = _encoded_adjacency(spark, path).join(
+                _dict_gate(spark, path, nids), "sid", "left_semi"
+            )
+        else:
+            ds = _dict_gate(
+                spark,
+                path,
+                dic.select(F.col("node").alias("src"), F.col("nid").alias("sid")),
+            )
+            dd = _dict_gate(
+                spark,
+                path,
+                dic.select(F.col("node").alias("dst"), F.col("nid").alias("did")),
+            )
+            enc = (
+                edge_state_adjacency(spark, path)
+                .join(ds, "src")
+                .join(dd, "dst")
+                .select("sid", "did", "w", "p")
+            )
+        return enc.localCheckpoint(eager=True)
+
+    return index_fact(spark, path, ("enc_adj", src_prefix), encode)
 
 
 def _encode_seed_nodes(
@@ -977,7 +792,8 @@ def pagerank_from_state(
             "re-execute the un-truncated iteration lineage"
         )
     role = edge_state_nodes(spark, path)
-    probe = _state_fact(
+    probe = index_fact(
+        spark,
         path,
         "pagerank_role_probe",
         lambda: role.agg(
@@ -1281,11 +1097,6 @@ def hits_from_state(
     return _decode_node_cols(spark, path, scores, ("node",))
 
 
-#: (path, pivot tuple, horizon, count_paths) -> (pivot_list, levels, counts)
-#: — see pivot_bfs_levels' memoization contract
-_PIVOT_BFS_CACHE: dict = {}
-
-
 def pivot_bfs_levels(
     spark: SparkSession,
     path: str,
@@ -1327,43 +1138,40 @@ def pivot_bfs_levels(
     frame of nodes FIRST reached at depth h, ``counts[h]`` its exact
     driver-known row count (the broadcast-gate inputs downstream).
 
-    MEMOIZED per process keyed by (path, pivots, horizon, mode) — the
+    MEMOIZED per process keyed by (state, pivots, horizon, mode) — the
     build-once/aggregate-many contract of the ANN index builders: edge
     states are immutable versions by contract, so a (state, pivot set,
     horizon) level relation is a standing artifact every centrality
-    aggregation reads, not a per-query computation. At 100 TB a
-    standing pipeline persists the level relation next to the state
-    (it is O(|V|·k/64) long lanes per level); in-process the
-    checkpointed frames serve the same role. ``checkpoint=False``
-    bypasses the cache (un-truncated lineage is caller-owned).
+    aggregation reads, not a per-query computation; the checkpointed
+    level frames are that artifact (``_memo.index_fact``, invalidated
+    by a rebuild). ``checkpoint=False`` bypasses the memo (un-truncated
+    lineage is caller-owned).
     """
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
     pivot_list = sorted(
         r["node"] for r in pivots.select("node").distinct().collect()
     )
-    cache_key = (path, tuple(pivot_list), max_hops, count_paths)
-    derived_uri = None
-    if checkpoint:
-        hit = _PIVOT_BFS_CACHE.get(cache_key)
-        if hit is not None:
-            return hit
-        # persisted next to the state version (r13, the "standing
-        # artifact" half of the memo contract below): cold JVMs read the
-        # committed level relations back instead of re-running the
-        # forward pass
-        import hashlib
 
-        digest = hashlib.md5(
-            ("\x1f".join(str(p) for p in pivot_list)
-             + f"|{max_hops}|{count_paths}").encode()
-        ).hexdigest()[:16]
-        derived_uri = f"{path}/derived/pivot_bfs_{digest}"
-        got = _read_derived_frames(spark, derived_uri)
-        if got is not None:
-            result = (pivot_list, got[0], got[1])
-            _PIVOT_BFS_CACHE[cache_key] = result
-            return result
+    def forward():
+        return _pivot_bfs_pass(
+            spark, path, pivot_list, max_hops, checkpoint, count_paths
+        )
+
+    if not checkpoint:
+        return forward()
+    key = ("pivot_bfs", tuple(pivot_list), max_hops, count_paths)
+    return index_fact(spark, path, key, forward)
+
+
+def _pivot_bfs_pass(
+    spark: SparkSession,
+    path: str,
+    pivot_list: list,
+    max_hops: int,
+    checkpoint: bool,
+    count_paths: bool,
+) -> tuple[list, list[DataFrame], list[int]]:
     k = len(pivot_list)
     if k == 0:
         raise ValueError("pivot_bfs_levels: no pivots")
@@ -1463,18 +1271,6 @@ def pivot_bfs_levels(
         counts.append(n_new)
         settled_parts.append(new.select("node", add_mask.alias("mask")))
         n_settled += n_new  # upper bound (merged nodes counted once more)
-    if checkpoint:
-        persisted = _write_derived_frames(spark, derived_uri, levels, counts)
-        if persisted is not None:
-            for df in levels:  # release the checkpointed compute frames
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-            levels = persisted
-        result = (pivot_list, levels, counts)
-        _PIVOT_BFS_CACHE[cache_key] = result
-        return result
     return (pivot_list, levels, counts)
 
 
@@ -1693,7 +1489,8 @@ def weighted_paths_from_state(
     # sums caller weights without filtering, so a state built from negative
     # inputs would silently return hop-bound-dependent distances — and
     # inverse_weight additionally needs strictly positive w (1/w length)
-    mn = _state_fact(
+    mn = index_fact(
+        spark,
         path,
         "min_w",
         lambda: adj.agg(F.min("w").alias("m")).first()["m"],
@@ -1773,7 +1570,8 @@ def louvain_from_state(
     )
     comms = kdeg.select("node", F.col("node").alias("comm"))
     n = int(edge_state_params(spark, path)["n_nodes"])
-    two_m = _state_fact(
+    two_m = index_fact(
+        spark,
         path,
         "sum_out_w",
         lambda: kdeg.agg(F.sum("k")).first()[0],
@@ -1825,12 +1623,6 @@ def _nf_alpha_m2(p: int) -> float:
     return alpha * m * m
 
 
-#: (normalized state path, p) -> list of per-radius LANE register frames
-#: (each localCheckpointed; index = radius). Extended in place when a
-#: caller wants a deeper horizon — the pivot_bfs_levels memo contract.
-_NF_REGS_CACHE: dict = {}
-
-
 def _nf_lane_registers(
     spark: SparkSession, path: str, horizon: int, p: int, checkpoint: bool
 ) -> list[DataFrame]:
@@ -1841,43 +1633,29 @@ def _nf_lane_registers(
     nodes-per-partition × m ints, never |E| × live-registers rows (the
     sparse (node, idx, ρ) form measured 27 s/query at sf0.1; lanes cut
     the superstep volume the way pivot_bfs_levels' lanes cut the
-    centrality BFS). Memoized per (state path, p): the neighborhood
-    function and the harmonic estimator share every superstep."""
-    key = (_norm_state_path(path), p)
-    cached = _NF_REGS_CACHE.get(key, [])
-    if len(cached) > horizon:
-        return cached[: horizon + 1]
+    centrality BFS). Memoized per (state path, p) as ONE list of
+    per-radius frames (index = radius), extended in place when a caller
+    wants a deeper horizon: the neighborhood function and the harmonic
+    estimator share every superstep."""
+    frames = index_fact(spark, path, ("nf_regs", p), list)
+    if len(frames) > horizon:
+        return frames[: horizon + 1]
     from rust_cdc_validator_spark.operators.sketch import hll_index_rank
 
     m = 1 << p
     lanes = [f"_r{j}" for j in range(m)]
-    derived_uri = f"{path}/derived/nf_regs_p{p}" if checkpoint else None
-    if cached:
-        frames = list(cached)
-    else:
-        frames = None
+    if not frames:
+        idx, rho = hll_index_rank(F.col("node"), p)
+        init = edge_state_nodes(spark, path).select(
+            "node",
+            *[
+                F.when(idx == j, rho).otherwise(F.lit(0)).alias(lane)
+                for j, lane in enumerate(lanes)
+            ],
+        )
         if checkpoint:
-            # persisted next to the state version (r13): cold JVMs read
-            # the committed register relations back instead of re-running
-            # the HyperBall forward pass
-            got = _read_derived_frames(spark, derived_uri)
-            if got is not None:
-                frames = got[0]
-                if len(frames) > horizon:
-                    _NF_REGS_CACHE[key] = frames
-                    return frames[: horizon + 1]
-        if frames is None:
-            idx, rho = hll_index_rank(F.col("node"), p)
-            init = edge_state_nodes(spark, path).select(
-                "node",
-                *[
-                    F.when(idx == j, rho).otherwise(F.lit(0)).alias(lane)
-                    for j, lane in enumerate(lanes)
-                ],
-            )
-            if checkpoint:
-                init = init.localCheckpoint(eager=True)
-            frames = [init]
+            init = init.localCheckpoint(eager=True)
+        frames.append(init)
     adj = edge_state_adjacency(spark, path).select(
         F.col("src").alias("_s"), F.col("dst").alias("_d")
     )
@@ -1894,19 +1672,6 @@ def _nf_lane_registers(
         if checkpoint:
             nxt = nxt.localCheckpoint(eager=True)
         frames.append(nxt)
-    if checkpoint:
-        # already-committed level dirs are skipped (pure function of the
-        # immutable state version), so a deeper horizon writes only the
-        # new radii; cache-extension frames re-read their own dirs
-        persisted = _write_derived_frames(spark, derived_uri, frames, None)
-        if persisted is not None:
-            for df in frames:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-            frames = persisted
-    _NF_REGS_CACHE[key] = frames
     return frames[: horizon + 1]
 
 

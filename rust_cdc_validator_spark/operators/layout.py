@@ -95,6 +95,25 @@ def zorder_layout(
     )
 
 
+def _ranged(
+    df: DataFrame, order_cols: list[str], num_ranges: int | None
+) -> DataFrame:
+    """The prefix scans' range-partitioned, sorted, ``_pid``-tagged frame,
+    materialized ONCE: the partition-local windows and the per-partition
+    offsets both read it, and two evaluations of the range exchange may
+    draw different boundaries (sampled), tagging rows with different
+    ``_pid`` values and corrupting the offsets."""
+    parts = num_ranges or df.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions", "32"
+    )
+    return (
+        df.repartitionByRange(int(parts), *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+
+
 def prefix_sum(
     df: DataFrame,
     order_cols: list[str],
@@ -140,14 +159,7 @@ def prefix_sums(
     """
     if not value_cols:
         raise ValueError("value_cols must not be empty")
-    parts = num_ranges or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
-    ranged = (
-        df.repartitionByRange(int(parts), *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
+    ranged = _ranged(df, order_cols, num_ranges)
     w = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)
@@ -225,14 +237,7 @@ def prefix_max(
     tie-free-order contract. Feeds running-record computations — e.g. the
     2-D Pareto frontier (operators/pareto.py) keeps rows beating every
     predecessor's best."""
-    parts = num_ranges or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
-    ranged = (
-        df.repartitionByRange(int(parts), *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
+    ranged = _ranged(df, order_cols, num_ranges)
     w = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)

@@ -483,10 +483,6 @@ def q_quantiles(
 # Key Bloom filter: engine-portable bitmap for join pruning (Bloom 1970)
 # ---------------------------------------------------------------------------
 
-_BLOOM_M = 65536  # bits; 4 md5 hex digits address exactly this space
-_BLOOM_WORD = 32  # bits per bitmap word (positive in int64 — no sign traps)
-
-
 def _bloom_pos(value: Column, i: int) -> Column:
     """Probe-``i`` bit position: 4 salted md5 hex digits = an unbiased
     16-bit address — the same engine-portable discipline as

@@ -57,12 +57,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df)
 
 
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    """Count of WholeStageCodegen regions — wider is better (fewer
-    interpreted seams)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", explain_str(df))))
-
-
 def exchanges_carrying(df: DataFrame, col_name: str) -> int:
     """Count Exchange (shuffle) nodes whose input carries ``col_name`` —
     the composed-pipeline audit: a corpus chain should move full TEXT

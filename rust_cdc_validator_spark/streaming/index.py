@@ -335,8 +335,7 @@ def vacuum_edge_state_versions(
         p = by_id[v]
         if fs.exists(hpath(p)):
             live.update(_walk_files(p))
-        m = _load_adj_manifest(spark, p)
-        if m is not None:
+            m = _load_adj_manifest(spark, p)
             for files in m["buckets"].values():
                 for rel in files:
                     live.add(_resolve_adj_entry(p, rel))

@@ -9,7 +9,6 @@ that silently doubles per-iteration actions fails here before it ships.
 
 from __future__ import annotations
 
-import shutil
 import time
 
 from pyspark.sql import functions as F
@@ -233,14 +232,12 @@ def test_harmonic_closeness_1m_edges_wall_and_job_count(spark, tmp_path):
     pivots = spark.createDataFrame([(i,) for i in range(8)], "node long")
 
     def run():
-        # the shared forward pass memoizes per (state, pivots, horizon) in
-        # two layers: the in-process cache and the levels persisted under
-        # {path}/derived — clear both so BOTH runs measure the full pass
-        # (the stability pin is about per-run job structure, not the memo)
-        from rust_cdc_validator_spark.operators import graphstate as gs
+        # the shared forward pass memoizes per (state, pivots, horizon) —
+        # drop the state's memo so BOTH runs measure the full pass (the
+        # stability pin is about per-run job structure, not the memo)
+        from rust_cdc_validator_spark.operators._memo import invalidate_index
 
-        gs._PIVOT_BFS_CACHE.clear()
-        shutil.rmtree(f"{path}/derived", ignore_errors=True)
+        invalidate_index(path)
         out = harmonic_closeness_from_state(spark, path, pivots, max_hops=3)
         return out.agg(
             F.count(F.lit(1)).alias("n"), F.max("n_reached").alias("r")
@@ -278,12 +275,10 @@ def test_betweenness_1m_edges_wall_and_job_count(spark, tmp_path):
     pivots = spark.createDataFrame([(i,) for i in range(8)], "node long")
 
     def run():
-        from rust_cdc_validator_spark.operators import graphstate as gs
+        from rust_cdc_validator_spark.operators._memo import invalidate_index
 
-        # measure the full pass both runs: clear the in-process memo and
-        # the levels persisted under {path}/derived
-        gs._PIVOT_BFS_CACHE.clear()
-        shutil.rmtree(f"{path}/derived", ignore_errors=True)
+        # measure the full pass both runs: drop the state's memo
+        invalidate_index(path)
         out = betweenness_from_state(spark, path, pivots, max_hops=2)
         return out.agg(
             F.count(F.lit(1)).alias("n"),

@@ -609,8 +609,8 @@ def test_advance_same_path_guard_normalizes_separator_runs(spark, tmp_path):
     '///' runs and '.'/'..' segments included (a single '//' replace
     missed '/tmp///s' vs '/tmp/s', letting an advance overwrite the
     state it reads)."""
+    from rust_cdc_validator_spark.operators._memo import _norm_path
     from rust_cdc_validator_spark.operators.graphstate import (
-        _norm_state_path,
         advance_edge_state,
     )
 
@@ -627,7 +627,7 @@ def test_advance_same_path_guard_normalizes_separator_runs(spark, tmp_path):
         with pytest.raises(ValueError, match="NEW state version"):
             advance_edge_state(spark, p0, ddf, alias)
     # scheme-qualified paths keep their authority intact
-    assert _norm_state_path("s3://bucket/state/") == "s3://bucket/state"
+    assert _norm_path("s3://bucket/state/") == "s3://bucket/state"
 
 
 def test_weighted_paths_from_state_rejects_nonpositive_weights(

@@ -159,6 +159,24 @@ def test_prefix_sums_multi_column_matches_single(spark):
         run_b += i % 5
 
 
+def test_prefix_scans_read_one_materialized_range_exchange(spark):
+    """The partition-local windows and the per-partition offsets must
+    read ONE evaluation of the range exchange: a second evaluation may
+    sample different boundaries and tag rows with different ``_pid``
+    values, making the running sums run-dependent. So the ranged frame
+    is materialized before either reads it, and the returned plan holds
+    no range repartition of its own."""
+    from rust_cdc_validator_spark.operators.layout import prefix_max, prefix_sums
+
+    df = spark.range(300).select("id", (F.col("id") % 7).alias("v"))
+    for out in (
+        prefix_sums(df, ["id"], {"v": "cv"}, num_ranges=4),
+        prefix_max(df, ["id"], "v", num_ranges=4),
+    ):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "RepartitionByExpression" not in plan, plan
+
+
 def _py_xy2d(n: int, x: int, y: int) -> int:
     """Classic Hilbert xy->d reference walk (MSB first)."""
     d = 0

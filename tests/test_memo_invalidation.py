@@ -1,6 +1,6 @@
-"""r12 optimization: per-path driver-fact memos (operators/_memo.py,
-graphstate._STATE_FACTS_CACHE) must serve cached facts across repeated
-query executions AND drop them when the artifact under the path is
+"""r12 optimization: the per-path driver-fact memo (operators/_memo.py,
+shared by the ANN indexes and the graph edge state) must serve cached
+facts across repeated query executions AND drop them when the artifact under the path is
 rebuilt — a stale params row or min-weight guard silently changes
 results, so invalidation is the load-bearing half of the optimization."""
 
@@ -10,7 +10,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from rust_cdc_validator_spark.operators import graphstate
-from rust_cdc_validator_spark.operators._memo import _CACHE, index_fact
+from rust_cdc_validator_spark.operators._memo import (
+    _CACHE,
+    _norm_path,
+    index_fact,
+)
 
 
 def _edges(spark, rows):
@@ -149,9 +153,9 @@ def test_nf_registers_cache_invalidated_by_rebuild(spark, tmp_path):
 
 
 def test_encoded_graph_artifacts_invalidated_by_rebuild(spark, tmp_path):
-    """r13: the long-encoded dict/adjacency are BOTH memoized and
-    persisted under {path}/derived — an in-place rebuild must drop the
-    memo AND delete the on-disk artifacts, or the superstep family
+    """The long-encoded dict/adjacency are memoized in operators/_memo
+    under the current application and never written next to the state —
+    an in-place rebuild must drop the memo, or the superstep family
     serves the OLD graph's encoding."""
     import os
 
@@ -167,9 +171,13 @@ def test_encoded_graph_artifacts_invalidated_by_rebuild(spark, tmp_path):
         ).collect()
     }
     assert h1 == {"a": 0, "b": 1}
-    # first use persisted the encoded artifacts next to the state
-    assert os.path.exists(os.path.join(path, "derived", "enc_dict", "_SUCCESS"))
-    assert os.path.exists(os.path.join(path, "derived", "enc_adj", "_SUCCESS"))
+    # the params fact and the encoded dict sit in the app-scoped memo
+    app = spark.sparkContext.applicationId
+    norm = _norm_path(path)
+    assert (app, norm, "params") in _CACHE
+    assert (app, norm, "enc_dict") in _CACHE
+    # nothing derived is written next to the state
+    assert not os.path.exists(os.path.join(path, "derived"))
     # rebuild IN PLACE with a longer chain: memo + artifacts must go
     graphstate.build_edge_state(
         _edges(spark, [("a", "b", 1.0), ("b", "c", 1.0)]),
@@ -177,7 +185,6 @@ def test_encoded_graph_artifacts_invalidated_by_rebuild(spark, tmp_path):
         weight_col="w",
         buckets=2,
     )
-    assert not os.path.exists(os.path.join(path, "derived"))
     h2 = {
         r["node"]: r["hops"]
         for r in graphstate.shortest_hops_from_state(

@@ -36,6 +36,23 @@ def test_text_functions(spark):
     assert 0.0 <= out[1]["q"] <= 1.0
 
 
+def test_str_array_expr_round_trips_under_both_parser_modes(spark):
+    """Quotes and backslashes must survive the single-expression array
+    literal whether or not the session parses escaped string literals."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            for words in (["it's", "a\\b", "plain"], ["the", "a b"]):
+                got = spark.range(1).select(
+                    TX._str_array_expr(words).alias("w")
+                ).first()["w"]
+                assert got == words, (mode, got)
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_word_shingles_and_fingerprint(spark):
     df = spark.createDataFrame([(1, "a b c d"), (2, "a b")], "id long, t string")
     rows = {r["id"]: r for r in df.select(

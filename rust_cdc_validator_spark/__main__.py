@@ -24,12 +24,12 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-from datetime import datetime, timezone
+from datetime import datetime
 
 from rust_cdc_validator_spark.api import CdcPayload, CdcValidator, _fan_out
 from rust_cdc_validator_spark.session import get_spark
 from rust_cdc_validator_spark.sources.catalog import StaticCatalog
-from rust_cdc_validator_spark.sources.manifest import FileMode
+from rust_cdc_validator_spark.sources.manifest import FileMode, to_utc
 
 
 def _load_catalog(path: str) -> StaticCatalog:
@@ -46,9 +46,7 @@ def _load_catalog(path: str) -> StaticCatalog:
 
 
 def _parse_date(s: str | None) -> datetime | None:
-    if not s:
-        return None
-    return datetime.fromisoformat(s).replace(tzinfo=timezone.utc)
+    return to_utc(s)
 
 
 def build_parser() -> argparse.ArgumentParser:

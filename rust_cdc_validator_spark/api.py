@@ -21,7 +21,7 @@ import os
 import posixpath
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from datetime import datetime, timezone
+from datetime import datetime
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
@@ -29,7 +29,11 @@ from pyspark.sql import DataFrame
 from rust_cdc_validator_spark.operators.diff import DiffReport, diff_tables
 from rust_cdc_validator_spark.operators.replay import replay_snapshot
 from rust_cdc_validator_spark.sources.catalog import Catalog
-from rust_cdc_validator_spark.sources.manifest import FileMode, discover_files
+from rust_cdc_validator_spark.sources.manifest import (
+    FileMode,
+    discover_files,
+    to_utc,
+)
 
 
 @dataclass
@@ -63,15 +67,10 @@ class CdcPayload:
             # (main.rs:60-63, required unless only_snapshot of a full load)
             raise ValueError("DATE_AWARE mode requires start_date")
         # accept ISO strings for the date bounds (the reference client takes
-        # "YYYY-MM-DDTHH:MM:SSZ" strings, main.rs:60-68) — naive values are
-        # pinned to UTC exactly like the CLI's _parse_date
-        for f_ in ("start_date", "stop_date"):
-            val = getattr(self, f_)
-            if isinstance(val, str):
-                dt = datetime.fromisoformat(val.replace("Z", "+00:00"))
-                if dt.tzinfo is None:
-                    dt = dt.replace(tzinfo=timezone.utc)
-                object.__setattr__(self, f_, dt)
+        # "YYYY-MM-DDTHH:MM:SSZ" strings, main.rs:60-68); every bound is
+        # held in UTC, the same rule the CLI's _parse_date applies
+        self.start_date = to_utc(self.start_date)
+        self.stop_date = to_utc(self.stop_date)
 
 
 def _fan_out(payload: CdcPayload, fn: Callable, tables: Iterable[str]) -> dict:
@@ -253,17 +252,13 @@ class CdcValidator:
         return self.spark.table(new_state_table)
 
     def _stamp_state_window(self, table_name: str, payload: CdcPayload) -> None:
-        def _utc(dt: datetime) -> datetime:
-            # naive bounds are UTC by the same convention the manifest
-            # filter applies (manifest.py:_aware) — stamp them as such so
-            # the round-trip through state_window is unambiguous
-            return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
-
+        # stamped in UTC, so the round-trip through state_window is
+        # unambiguous
         props = {}
         if payload.start_date:
-            props["cdc.window.start"] = _utc(payload.start_date).isoformat()
+            props["cdc.window.start"] = to_utc(payload.start_date).isoformat()
         if payload.stop_date:
-            props["cdc.window.stop"] = _utc(payload.stop_date).isoformat()
+            props["cdc.window.stop"] = to_utc(payload.stop_date).isoformat()
         if props:
             kv = ", ".join(
                 f"'{k}'='{v.replace(chr(39), chr(39) * 2)}'"

@@ -58,6 +58,20 @@ def is_load_file(path: str) -> bool:
 _DATA_SUFFIXES = (".parquet", ".csv", ".csv.gz")
 
 
+def to_utc(value: datetime | str | None) -> datetime | None:
+    """The package's one rule for date bounds: an ISO string is parsed
+    (``Z`` included), a naive value means UTC, and an offset is converted
+    to UTC. DMS date folders are UTC dates, so the date-folder walk needs
+    the UTC calendar date of each bound. Empty values give ``None``."""
+    if not value:
+        return None
+    if isinstance(value, str):
+        value = datetime.fromisoformat(value.replace("Z", "+00:00"))
+    if value.tzinfo is None:
+        return value.replace(tzinfo=timezone.utc)
+    return value.astimezone(timezone.utc)
+
+
 def hadoop_fs(spark, uri: str):
     """``(FileSystem, Path, jvm)`` for ``uri`` through Spark's Hadoop
     configuration — the one place the package builds Hadoop FS handles, so
@@ -106,7 +120,8 @@ def _hadoop_list_date_narrowed(
 ) -> list[tuple[str, float]]:
     """Date-prefix-narrowed listing: LOAD* files at the table root plus only
     the ``{YYYY}/{MM}/{DD}/`` folders whose path date falls in
-    [start_date.date(), stop_date.date()].
+    [start_date.date(), stop_date.date()]. Both bounds are UTC
+    (:func:`discover_files` normalizes them), as DMS folder dates are.
 
     This mirrors the reference's ``start_after={table}/{YYYY/MM/DD}/`` S3
     range scan (s3_operator.rs:220-226): keys lexicographically before the
@@ -191,6 +206,7 @@ def discover_files(
     CDC files lexicographic — the date-folder layout makes key order = time
     order. ``file_seq`` is the dense replay rank.
     """
+    start_date, stop_date = to_utc(start_date), to_utc(stop_date)
     if mode is FileMode.ABSOLUTE_PATH:
         if not absolute_path:
             raise ValueError("ABSOLUTE_PATH mode requires absolute_path")
@@ -208,9 +224,6 @@ def discover_files(
         else:
             entries = _hadoop_list(spark, table_root)
 
-    def _aware(dt: datetime) -> datetime:
-        return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
-
     kept: list[tuple[str, float, bool]] = []
     for path, mtime in entries:
         load = is_load_file(path)
@@ -218,9 +231,9 @@ def discover_files(
             continue
         if mode is FileMode.DATE_AWARE and not load:
             ts = datetime.fromtimestamp(mtime, tz=timezone.utc)
-            if start_date is not None and ts < _aware(start_date):
+            if start_date is not None and ts < start_date:
                 continue
-            if stop_date is not None and ts >= _aware(stop_date):
+            if stop_date is not None and ts >= stop_date:
                 continue
         kept.append((path, mtime, load))
 

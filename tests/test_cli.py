@@ -133,6 +133,30 @@ def test_missing_required_args_error_names_interactive(capsys):
     assert "--interactive" in capsys.readouterr().err
 
 
+def test_cli_dates_are_utc_instants_like_the_api():
+    """A CLI date string means the same instant as the same string given to
+    CdcPayload: an offset is converted to UTC, ``Z`` is UTC and a naive
+    value is taken as UTC."""
+    from datetime import datetime, timedelta, timezone
+
+    from rust_cdc_validator_spark.__main__ import _parse_date
+    from rust_cdc_validator_spark.api import CdcPayload
+
+    for text, want in [
+        ("2024-01-02T03:00:00+05:00", datetime(2024, 1, 1, 22, 0)),
+        ("2024-01-02T03:00:00Z", datetime(2024, 1, 2, 3, 0)),
+        ("2024-01-02T03:00:00", datetime(2024, 1, 2, 3, 0)),
+    ]:
+        want = want.replace(tzinfo=timezone.utc)
+        got = _parse_date(text)
+        assert got == want and got.utcoffset() == timedelta(0), text
+        payload = CdcPayload(bucket_root="file:///tmp/cdc", database="db",
+                             schema="public", start_date=text, stop_date=text)
+        assert payload.start_date == got and payload.stop_date == got, text
+        assert payload.start_date.utcoffset() == timedelta(0), text
+    assert _parse_date(None) is None and _parse_date("") is None
+
+
 def test_cli_import_loads_only_the_cdc_core():
     """Importing the CLI must not pull in the catalog or the corpus, drift
     and quality operators; the subcommands that need them import lazily."""

@@ -149,6 +149,45 @@ def test_date_narrowed_listing_stop_side_and_boundaries(spark, tmp_path):
     assert names == {"LOAD00000001.parquet"}
 
 
+def test_date_narrowed_listing_uses_utc_folder_dates_for_offset_bounds(
+    spark, tmp_path
+):
+    """DMS date folders are UTC dates, so a bound with a UTC offset selects
+    the same files as the same instant written in UTC, on both sides: the
+    start 2024-01-02T03:00+05:00 is 2024-01-01T22:00Z (day folder 01/01)
+    and the stop 2024-01-01T20:00-05:00 is 2024-01-02T01:00Z (day folder
+    01/02)."""
+    import os
+    from datetime import timedelta
+
+    cols = ["Op", "_dms_ingestion_timestamp", "id", "v"]
+    root = str(tmp_path / "db/public/t")
+    write_cdc_file(f"{root}/LOAD00000001.parquet",
+                   [{"Op": "I", "_dms_ingestion_timestamp": "t", "id": 1, "v": 1}], cols)
+    for rel, mtime in [
+        ("2024/01/01/a.parquet", datetime(2024, 1, 1, 23, 0, tzinfo=timezone.utc)),
+        ("2024/01/02/b.parquet", datetime(2024, 1, 2, 0, 30, tzinfo=timezone.utc)),
+    ]:
+        write_cdc_file(f"{root}/{rel}",
+                       [{"Op": "U", "_dms_ingestion_timestamp": "t", "id": 1, "v": 2}], cols)
+        os.utime(f"{root}/{rel}", (mtime.timestamp(), mtime.timestamp()))
+
+    def names(start, stop=None):
+        entries = discover_files(spark, root, FileMode.DATE_AWARE,
+                                 start_date=start, stop_date=stop)
+        return [e.path.rsplit("/", 1)[-1] for e in entries]
+
+    want = ["LOAD00000001.parquet", "a.parquet", "b.parquet"]
+    east = timezone(timedelta(hours=5))
+    west = timezone(timedelta(hours=-5))
+    start = datetime(2024, 1, 2, 3, 0, tzinfo=east)
+    stop = datetime(2024, 1, 1, 20, 0, tzinfo=west)
+    assert names(start.astimezone(timezone.utc)) == want
+    assert names(start) == want
+    assert names(start.astimezone(timezone.utc), stop.astimezone(timezone.utc)) == want
+    assert names(start, stop) == want
+
+
 def test_date_narrowed_listing_non_date_dirs_fall_back(spark, tmp_path):
     """Layouts without date folders keep full-recursive semantics."""
     cols = ["Op", "_dms_ingestion_timestamp", "id", "v"]

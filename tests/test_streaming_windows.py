@@ -181,208 +181,6 @@ def test_sessionize_stateful_closes_on_gap_across_batches(spark, tmp_path):
     assert emitted() == [(1, 0, 60, 2)]
 
 
-def test_maintain_minhash_index_across_batches(spark, tmp_path):
-    """Streaming index maintenance: batch 2's near-dup of a batch-1 doc is
-    found (so appends really feed later probes), batch 1 probes an
-    EMPTY index without error, and the final index equals a one-shot
-    build over everything ingested."""
-    from rust_cdc_validator_spark.operators.dedup import build_minhash_index
-    from rust_cdc_validator_spark.streaming.index import maintain_minhash_index
-
-    import pyarrow as pa_
-    import pyarrow.parquet as pq_
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    b1 = [(1, base), (2, "completely different text on another subject here")]
-    b2 = [(11, base), (12, "novel text that matches nothing in the index ok")]
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    idx = str(tmp_path / "mh_idx")
-    pairs = str(tmp_path / "pairs")
-    ck = str(tmp_path / "ck")
-    # seed an empty index so batch 1 has something to probe
-    build_minhash_index(
-        spark.createDataFrame([], "doc_id long, text string"), idx
-    )
-
-    def w(name, rows):
-        pq_.write_table(
-            pa_.table({"doc_id": [r[0] for r in rows],
-                       "text": [r[1] for r in rows]}), str(src / name))
-
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-
-    # two separate availableNow drains against one checkpoint: file-source
-    # discovery order is not contractual (see the sessionize test), so the
-    # second batch is written only after the first drain finishes
-    def drain():
-        q = (
-            maintain_minhash_index(stream, idx, pairs, ck, threshold=0.5)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    w("b1.parquet", b1)
-    drain()
-    w("b2.parquet", b2)
-    drain()
-
-    got = {(r["id_old"], r["id_new"])
-           for r in spark.read.parquet(pairs).collect()}
-    assert (1, 11) in got            # cross-batch dup found
-    assert all(o != n for o, n in got)
-
-    oneshot = str(tmp_path / "oneshot")
-    build_minhash_index(
-        spark.createDataFrame(b1 + b2, "doc_id long, text string"), oneshot
-    )
-    for part in ("signatures", "memberships"):
-        a = sorted(map(tuple, spark.read.parquet(f"{idx}/{part}").collect()))
-        b = sorted(map(tuple, spark.read.parquet(f"{oneshot}/{part}").collect()))
-        assert a == b, part
-
-
-def test_maintain_lsh_index_across_batches(spark, tmp_path):
-    """Embedding sibling: batch 2's near-identical vector to a batch-1
-    vector is found via the persisted index, and the final index equals a
-    one-shot build over everything ingested."""
-    from rust_cdc_validator_spark.operators.similarity import build_lsh_index
-    from rust_cdc_validator_spark.streaming.index import maintain_lsh_index
-
-    import pyarrow as pa_
-    import pyarrow.parquet as pq_
-
-    kw = dict(dim=4, num_planes=6, num_tables=4)
-    b1 = [(1, [0.0, 1.0, 0.05, 0.0]), (2, [5.0, -1.0, 3.0, 2.0])]
-    b2 = [(11, [0.0, 1.0, 0.0501, 0.0]), (12, [-9.0, 4.0, -2.0, 7.0])]
-
-    src = tmp_path / "vecs_in"
-    src.mkdir()
-    idx = str(tmp_path / "lsh_idx")
-    pairs = str(tmp_path / "pairs")
-    ck = str(tmp_path / "ck")
-    build_lsh_index(
-        spark.createDataFrame([], "vec_id long, embedding array<float>"),
-        idx, **kw,
-    )
-
-    def w(name, rows):
-        pq_.write_table(
-            pa_.table({"vec_id": pa_.array([r[0] for r in rows], pa_.int64()),
-                       "embedding": pa_.array([r[1] for r in rows],
-                                              pa_.list_(pa_.float32()))}),
-            str(src / name))
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .parquet(str(src))
-    )
-
-    def drain():
-        q = (
-            maintain_lsh_index(stream, idx, pairs, ck, threshold=0.9)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    w("b1.parquet", b1)
-    drain()
-    w("b2.parquet", b2)
-    drain()
-
-    got = {(r["id_old"], r["id_new"]) for r in spark.read.parquet(pairs).collect()}
-    assert (1, 11) in got
-
-    oneshot = str(tmp_path / "oneshot")
-    build_lsh_index(
-        spark.createDataFrame(
-            b1 + b2, "vec_id long, embedding array<float>"
-        ),
-        oneshot, **kw,
-    )
-    for part in ("memberships", "vectors"):
-        a = sorted(map(lambda r: (r[0], str(r[1:])),
-                       spark.read.parquet(f"{idx}/{part}").collect()))
-        b = sorted(map(lambda r: (r[0], str(r[1:])),
-                       spark.read.parquet(f"{oneshot}/{part}").collect()))
-        assert a == b, part
-
-
-def test_maintain_ivf_index_appends_and_flags_refit(spark, tmp_path):
-    """IVF maintenance: streamed batches land in their nearest stored
-    cell, the index ends identical to append()ing the same batches, and a
-    pathologically-skewed stream raises the refit flag."""
-    import numpy as np
-
-    from rust_cdc_validator_spark.operators.similarity import build_ivf_index
-    from rust_cdc_validator_spark.streaming.index import maintain_ivf_index
-
-    import math
-    import pyarrow as pa_
-    import pyarrow.parquet as pq_
-
-    def ring(ids):
-        rows = []
-        for i in ids:
-            a = (i % 15) * 2 * math.pi / 15
-            rows.append((i, [math.cos(a), math.sin(a), 0.05, 0.1]))
-        return rows
-
-    seed_rows = ring(range(100))
-    idx = str(tmp_path / "ivf_idx")
-    build_ivf_index(
-        spark.createDataFrame(seed_rows, "vec_id long, embedding array<float>"),
-        idx, n_cells=4, seed=7,
-    )
-
-    src = tmp_path / "vecs_in"
-    src.mkdir()
-    # two batches; second is a hot-spot burst at one point on the ring ->
-    # lands in one cell and trips the imbalance cue
-    b1 = ring(range(100, 140))
-    b2 = [(1000 + i, [1.0, 0.0, 0.05, 0.1]) for i in range(400)]
-    for name, rows in (("b1.parquet", b1), ("b2.parquet", b2)):
-        pq_.write_table(
-            pa_.table({"vec_id": pa_.array([r[0] for r in rows], pa_.int64()),
-                       "embedding": pa_.array([r[1] for r in rows],
-                                              pa_.list_(pa_.float32()))}),
-            str(src / name))
-
-    flag = str(tmp_path / "refit_flag")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    q = (
-        maintain_ivf_index(stream, idx, str(tmp_path / "ck"),
-                           refit_flag_path=flag, max_imbalance=2.0)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    stored = spark.read.parquet(f"{idx}/vectors").collect()
-    assert sorted(r["_id"] for r in stored) == sorted(
-        [r[0] for r in seed_rows + b1 + b2]
-    )
-    cents = np.stack(
-        spark.read.parquet(f"{idx}/centroids").orderBy("cell")
-        .toPandas()["centroid"].to_numpy()
-    )
-    for r in stored[:50]:
-        v = np.asarray(r["_v"], dtype=np.float64)
-        v = v / np.linalg.norm(v)
-        assert int(np.argmax(cents @ v)) == r["cell"]
-
-    import os
-    assert os.path.isdir(flag)  # skewed burst tripped the refit cue
-    assert spark.read.parquet(flag).count() >= 1
-
-
 def test_distinct_count_stateful_state_equals_batch_sketch(spark, tmp_path):
     """Streaming HLL state must be BIT-IDENTICAL to a batch sketch of the
     union of all batches (the exact-merge contract carried into
@@ -1129,276 +927,6 @@ def test_stream_interval_join_left_outer_emits_unmatched(spark, tmp_path):
     assert (2, None) in got       # unmatched left emitted with nulls
 
 
-def test_maintain_edge_state_across_batches(spark, tmp_path):
-    """Streaming graph maintenance: two delta batches fold into the
-    persisted edge state and the FINAL version equals a one-shot build
-    over everything ingested — including a batch-2 retraction of a
-    batch-1 edge. Readers resolve versions through the log only."""
-    import pyarrow as pa_
-    import pyarrow.parquet as pq_
-
-    from rust_cdc_validator_spark.operators.graphstate import (
-        build_edge_state,
-        edge_state_adjacency,
-        edge_state_params,
-    )
-    from rust_cdc_validator_spark.streaming.index import (
-        current_edge_state,
-        init_edge_state_log,
-        maintain_edge_state,
-    )
-
-    base = [("a", "b", 2.0), ("b", "c", 1.0)]
-    b1 = [("a", "b", 1.0), ("c", "d", 3.0)]
-    b2 = [("b", "c", -1.0), ("d", "e", 1.0)]  # retracts b-c entirely
-
-    v0 = str(tmp_path / "v_init")
-    build_edge_state(
-        spark.createDataFrame(base, "src string, dst string, w double"),
-        v0, weight_col="w", directed=False, buckets=2,
-    )
-    versions = str(tmp_path / "versions")
-    init_edge_state_log(spark, versions, v0)
-    assert current_edge_state(spark, versions) == v0
-
-    src_dir = tmp_path / "edges_in"
-    src_dir.mkdir()
-    ck = str(tmp_path / "ck")
-    state_root = str(tmp_path / "state")
-
-    def w(name, rows):
-        pq_.write_table(
-            pa_.table({
-                "src": [r[0] for r in rows],
-                "dst": [r[1] for r in rows],
-                "w": [r[2] for r in rows],
-            }),
-            str(src_dir / name),
-        )
-
-    stream = spark.readStream.schema(
-        "src string, dst string, w double"
-    ).parquet(str(src_dir))
-
-    def drain():
-        q = (
-            maintain_edge_state(
-                stream, state_root, versions, ck, weight_col="w"
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    w("b1.parquet", b1)
-    drain()
-    w("b2.parquet", b2)
-    drain()
-
-    final = current_edge_state(spark, versions)
-    assert final != v0 and final.startswith(state_root)
-
-    oneshot = str(tmp_path / "oneshot")
-    build_edge_state(
-        spark.createDataFrame(
-            base + b1 + [("d", "e", 1.0)],  # net of the b-c retraction
-            "src string, dst string, w double",
-        ).filter("NOT (src = 'b' AND dst = 'c')"),
-        oneshot, weight_col="w", directed=False, buckets=2,
-    )
-    got_adj = sorted(
-        map(tuple, edge_state_adjacency(spark, final).collect())
-    )
-    want_adj = sorted(
-        map(tuple, edge_state_adjacency(spark, oneshot).collect())
-    )
-    assert got_adj == want_adj
-    gp, wp = edge_state_params(spark, final), edge_state_params(spark, oneshot)
-    assert (gp["n_nodes"], gp["n_edges"]) == (wp["n_nodes"], wp["n_edges"])
-
-
-def test_maintain_edge_state_retry_is_noop_for_registered_version(
-    spark, tmp_path
-):
-    """Crash-retry guard: a batch that already REGISTERED its version in
-    the log must not re-advance on retry — rewriting v{batch_id} in
-    place (parquet overwrite = delete + rewrite) would race readers
-    resolving current_edge_state. Simulated by deleting the CHECKPOINT
-    after a successful drain (crash between log append and checkpoint
-    commit): the re-run batch sees its version in the log, skips, and
-    every state file stays byte-identical."""
-    import pathlib
-    import shutil
-
-    import pyarrow as pa_
-    import pyarrow.parquet as pq_
-
-    from rust_cdc_validator_spark.operators.graphstate import (
-        build_edge_state,
-    )
-    from rust_cdc_validator_spark.streaming.index import (
-        current_edge_state,
-        init_edge_state_log,
-        maintain_edge_state,
-    )
-
-    v0 = str(tmp_path / "v_init")
-    build_edge_state(
-        spark.createDataFrame(
-            [("a", "b", 2.0)], "src string, dst string, w double"
-        ),
-        v0, weight_col="w", directed=False, buckets=2,
-    )
-    versions = str(tmp_path / "versions")
-    init_edge_state_log(spark, versions, v0)
-
-    src_dir = tmp_path / "edges_in"
-    src_dir.mkdir()
-    pq_.write_table(
-        pa_.table({"src": ["b"], "dst": ["c"], "w": [1.0]}),
-        str(src_dir / "b1.parquet"),
-    )
-    ck = str(tmp_path / "ck")
-    state_root = str(tmp_path / "state")
-    stream = spark.readStream.schema(
-        "src string, dst string, w double"
-    ).parquet(str(src_dir))
-
-    def drain():
-        q = (
-            maintain_edge_state(
-                stream, state_root, versions, ck, weight_col="w"
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    drain()
-    registered = current_edge_state(spark, versions)
-    assert registered.startswith(state_root)
-
-    def snapshot(root):
-        return {
-            str(p.relative_to(root)): (p.stat().st_mtime_ns, p.read_bytes())
-            for p in sorted(pathlib.Path(root).rglob("*"))
-            if p.is_file()
-        }
-
-    before = snapshot(registered)
-    n_log_rows = spark.read.parquet(versions).count()
-
-    # crash between log append and checkpoint commit -> batch re-runs
-    shutil.rmtree(ck)
-    drain()
-
-    assert snapshot(registered) == before  # not even rewritten in place
-    assert spark.read.parquet(versions).count() == n_log_rows
-    assert current_edge_state(spark, versions) == registered
-
-
-def test_vacuum_edge_state_versions_respects_shared_files(spark, tmp_path):
-    """Vacuum keeps the newest N versions, deletes a dropped version's
-    UNSHARED files only (bucket files still referenced by kept manifests
-    survive in place), heals unregistered orphan dirs, and the chain
-    stays fully readable + advanceable afterwards."""
-    import pathlib
-
-    from rust_cdc_validator_spark.operators.graphstate import (
-        advance_edge_state,
-        build_edge_state,
-        edge_state_adjacency,
-    )
-    from rust_cdc_validator_spark.streaming.index import (
-        current_edge_state,
-        init_edge_state_log,
-        vacuum_edge_state_versions,
-    )
-
-    root = tmp_path / "state"
-    root.mkdir()
-    v_init = str(root / "v-1")
-    base = [(f"n{i}", f"n{(i + 1) % 16}", 1.0) for i in range(16)]
-    build_edge_state(
-        spark.createDataFrame(base, "src string, dst string, w double"),
-        v_init, weight_col="w", directed=False, buckets=4,
-    )
-    versions = str(tmp_path / "versions")
-    init_edge_state_log(spark, versions, v_init)
-
-    def log_append(bid, p):
-        spark.createDataFrame(
-            [(bid, p)], "batch_id long, path string"
-        ).write.mode("append").parquet(versions)
-
-    v0, v1 = str(root / "v0"), str(root / "v1")
-    d0 = spark.createDataFrame(
-        [("n0", "n1", 2.0)], "src string, dst string, w double"
-    )
-    advance_edge_state(spark, v_init, d0, v0, weight_col="w")
-    log_append(0, v0)
-    d1 = spark.createDataFrame(
-        [("n2", "n3", 3.0)], "src string, dst string, w double"
-    )
-    advance_edge_state(spark, v0, d1, v1, weight_col="w")
-    log_append(1, v1)
-
-    want_adj = sorted(map(tuple, edge_state_adjacency(spark, v1).collect()))
-
-    # a crashed half-written advance: unregistered orphan dir
-    orphan = root / "v99"
-    (orphan / "adj").mkdir(parents=True)
-    (orphan / "adj" / "part-junk.parquet").write_bytes(b"junk")
-
-    report = vacuum_edge_state_versions(
-        spark, str(root), versions, keep_last=2
-    )
-    assert report["kept"] == [0, 1]
-    assert report["dropped"] == [-1]
-    assert report["healed_orphans"] == [str(orphan)]
-    assert not orphan.exists()
-    # v-1's shared bucket files (referenced by kept manifests) survive…
-    assert report["retained_shared_files"]
-    for f in report["retained_shared_files"]:
-        assert pathlib.Path(f).exists()
-    # …its unshared metadata is gone
-    assert report["deleted_files"]
-    for f in report["deleted_files"]:
-        assert not pathlib.Path(f).exists()
-    assert not (pathlib.Path(v_init) / "adj_manifest.json").exists()
-
-    # chain intact: resolve, read, advance again
-    assert current_edge_state(spark, versions) == v1
-    got_adj = sorted(map(tuple, edge_state_adjacency(spark, v1).collect()))
-    assert got_adj == want_adj
-    v2 = str(root / "v2")
-    advance_edge_state(
-        spark, v1,
-        spark.createDataFrame(
-            [("n5", "n6", 1.0)], "src string, dst string, w double"
-        ),
-        v2, weight_col="w",
-    )
-    log_append(2, v2)
-    assert edge_state_adjacency(spark, v2).count() >= len(want_adj)
-
-    # dry_run reports without deleting
-    rep2 = vacuum_edge_state_versions(
-        spark, str(root), versions, keep_last=1, dry_run=True
-    )
-    # log rows are kept across vacuums by design, so the already-GC'd
-    # seed shows as dropped again (its dir is gone; nothing to delete)
-    assert rep2["dropped"] == [-1, 0, 1]
-    for f in rep2["deleted_files"]:
-        assert pathlib.Path(f).exists()
-
-    # keep_last below 1 is refused loudly
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="keep_last"):
-        vacuum_edge_state_versions(spark, str(root), versions, keep_last=0)
-
-
 def test_dedup_within_watermark_drops_then_reemits_after_expiry(spark, tmp_path):
     """dropDuplicatesWithinWatermark semantics across micro-batches:
     a duplicate id within the watermark window is dropped; once the
@@ -1595,72 +1123,3 @@ def test_cusum_stateful_drops_out_of_order_ticks(spark, tmp_path):
     assert ticks == [10, 20, 30]  # the straggler at 15 was dropped
     with pytest.raises(ValueError, match="sigma"):
         cusum_stateful(stream, mu=0.0, sigma=0.0)
-
-
-def test_maintain_kmv_sketch_merge_equals_one_shot(spark, tmp_path):
-    from rust_cdc_validator_spark.operators.sketch import kmv_sketch
-    from rust_cdc_validator_spark.streaming.index import (
-        current_edge_state,
-        init_edge_state_log,
-        maintain_kmv_sketch,
-    )
-
-    k = 32
-    seed_rows = [("a", i) for i in range(20)] + [("b", i) for i in range(200)]
-    b1 = [("a", i) for i in range(10, 60)] + [("b", i) for i in range(150, 400)]
-    b2 = [("a", i) for i in range(55, 90)] + [("c", i) for i in range(40)]
-
-    root = str(tmp_path / "kmv_state")
-    versions = str(tmp_path / "kmv_versions")
-    seed_path = f"{root}/seed"
-    kmv_sketch(
-        spark.createDataFrame(seed_rows, "g string, v long"), ["g"], "v", k=k
-    ).write.parquet(seed_path)
-    init_edge_state_log(spark, versions, seed_path)
-
-    src = tmp_path / "kmv_src"
-    src.mkdir()
-    for name, rows in (("b1", b1), ("b2", b2)):
-        pq.write_table(
-            pa.table(
-                {"g": [r[0] for r in rows], "v": [r[1] for r in rows]}
-            ),
-            str(src / f"{name}.parquet"),
-        )
-    schema = T.StructType(
-        [T.StructField("g", T.StringType()), T.StructField("v", T.LongType())]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        maintain_kmv_sketch(
-            stream, root, versions, str(tmp_path / "ckpt"), "g", "v", k=k
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    resolved = current_edge_state(spark, versions)
-    got = {
-        r["g"]: r for r in spark.read.parquet(resolved).collect()
-    }
-    want = {
-        r["g"]: r
-        for r in kmv_sketch(
-            spark.createDataFrame(
-                seed_rows + b1 + b2, "g string, v long"
-            ),
-            ["g"],
-            "v",
-            k=k,
-        ).collect()
-    }
-    assert set(got) == set(want) == {"a", "b", "c"}
-    for g in want:  # merge-of-sketches == sketch-of-union, bit-identical
-        assert got[g]["hashes"] == want[g]["hashes"], g
-        assert got[g]["est"] == want[g]["est"], g
-        assert got[g]["saturated"] == want[g]["saturated"], g

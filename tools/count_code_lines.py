@@ -1,10 +1,12 @@
-"""Count code lines of the Python files under a directory: blank lines,
-comment-only lines and docstring lines (module, class and function
-docstrings) are not counted. Prints one line per file and the total.
+"""Count code lines of the Python files under a directory, or of one
+``.py`` file: blank lines, comment-only lines and docstring lines (module,
+class and function docstrings) are not counted. Prints one line per file
+and the total.
 
 Usage:
 
     python tools/count_code_lines.py rust_cdc_validator_spark
+    python tools/count_code_lines.py rust_cdc_validator_spark/api.py
 
 Standard library only (``ast`` + ``tokenize``), so it runs without the
 package's dependencies.
@@ -57,22 +59,33 @@ def count_code_lines(source: str) -> int:
     return len(code - _docstring_lines(ast.parse(source)))
 
 
-def main(argv: list[str]) -> int:
-    if len(argv) != 1:
-        print(__doc__.strip(), file=sys.stderr)
-        return 2
-    root = argv[0]
-    total = 0
+def _py_files(root: str) -> list[str]:
+    """``root`` itself if it is a ``.py`` file, else the ``.py`` files
+    under the directory ``root`` in walk order."""
+    if os.path.isfile(root):
+        return [root] if root.endswith(".py") else []
+    paths = []
     for dirpath, dirnames, filenames in os.walk(root):
         dirnames.sort()
-        for name in sorted(filenames):
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, name)
-            with open(path, encoding="utf-8") as f:
-                n = count_code_lines(f.read())
-            total += n
-            print(f"{n:8d}  {path}")
+        paths += [
+            os.path.join(dirpath, name)
+            for name in sorted(filenames)
+            if name.endswith(".py")
+        ]
+    return paths
+
+
+def main(argv: list[str]) -> int:
+    paths = _py_files(argv[0]) if len(argv) == 1 else []
+    if not paths:
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
+    total = 0
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            n = count_code_lines(f.read())
+        total += n
+        print(f"{n:8d}  {path}")
     print(f"{total:8d}  total")
     return 0
 
